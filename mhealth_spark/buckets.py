@@ -16,7 +16,7 @@ Parity notes (pandas ``resample`` edge semantics, SURVEY §7.4):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 SECONDS_PER_DAY = 86400
 
@@ -43,42 +43,6 @@ def anchored_day_bucket(
     return (F.date_trunc("DAY", F.col(ts_col) - shift) + shift).alias("noon_day")
 
 
-def per_entity_anchored_bucket(
-    df: DataFrame,
-    entity_col: str = "user_id",
-    ts_col: str = "local_start",
-    anchor_hour: int = 15,
-    out_col: str = "noon_day",
-) -> DataFrame:
-    """R5 with the reference's PER-ENTITY dynamic origin.
-
-    pandas ``resample("1D", origin=first_row.date @ 15:00)``
-    (simple_features.py:279-281): the first bin starts at the first
-    event's date at 15:00, and events BEFORE that origin fall into
-    earlier bins by floor division (pandas generates bins backward from
-    the origin). bucket = origin + floor((ts − origin)/1d) days.
-
-    Implemented as a window ``min`` over the entity partition — reuses
-    the engine's (entity, ts) layout, no extra shuffle after
-    ``layout_events``.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(entity_col)
-    origin = (
-        F.date_trunc("DAY", F.min(ts_col).over(w))
-        + F.expr(f"INTERVAL {anchor_hour} HOURS")
-    )
-    delta = F.unix_timestamp(F.col(ts_col).cast("timestamp")) - F.unix_timestamp(
-        origin.cast("timestamp")
-    )
-    bucket_idx = F.floor(delta / SECONDS_PER_DAY)
-    bucket = F.timestamp_seconds(
-        F.unix_timestamp(origin.cast("timestamp")) + bucket_idx * SECONDS_PER_DAY
-    ).cast("timestamp_ntz")
-    return df.withColumn(out_col, bucket)
-
-
 def duration_hours(start_col: str = "local_start", end_col: str = "local_end") -> Column:
     """Interval duration in fractional hours (I3)."""
     return (
@@ -87,12 +51,6 @@ def duration_hours(start_col: str = "local_start", end_col: str = "local_end") -
     )
 
 
-def duration_minutes(start_col: str = "local_start", end_col: str = "local_end") -> Column:
-    """Interval duration in fractional minutes (I3)."""
-    return (
-        (F.unix_micros(F.col(end_col).cast("timestamp"))
-         - F.unix_micros(F.col(start_col).cast("timestamp"))) / 6e7
-    )
 # NB: the old coverage_percent helper was removed — it was unused, and its
 # ceil(...)+1 denominator disagreed with watch_on_stats' floor(...)+1 (the
 # one matching the reference's pandas date_range counting). R6 coverage

@@ -277,20 +277,3 @@ def add_local_time(
             .cast("timestamp_ntz"),
         )
     return out
-
-
-def load_multi_sensor(
-    spark: SparkSession, paths: list[str], user_id: str | None = None
-) -> DataFrame:
-    """S6 (dataloader.py:232-250): per-sensor file scan + union
-    (allowMissingColumns mirrors pandas concat alignment)."""
-    frames = []
-    for p in paths:
-        d = load_csv(spark, p) if p.endswith(".csv") else spark.read.parquet(p)
-        if user_id is not None:
-            d = d.withColumn("user_id", F.lit(user_id))
-        frames.append(d)
-    out = frames[0]
-    for d in frames[1:]:
-        out = out.unionByName(d, allowMissingColumns=True)
-    return out

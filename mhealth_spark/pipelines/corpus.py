@@ -26,7 +26,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 
@@ -997,6 +997,30 @@ def select_best_per_group(
     )
 
 
+def _dsir_features(w: Column) -> Column:
+    """A doc's DSIR features: its words, then its adjacent bigrams. The
+    sequence is guarded because sequence(1, 0) DESCENDS in Spark (DuckDB
+    generate_series is empty)."""
+    bigrams = F.when(
+        F.size(w) >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size(w) - 1),
+            lambda i: F.concat_ws(" ", F.element_at(w, i), F.element_at(w, i + 1)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    return F.concat(w, bigrams)
+
+
+def _dsir_bucket(ft: Column, n_buckets: int, salt: str) -> Column:
+    """A feature's bucket: the first 8 hex chars of md5(feature '#' salt)
+    modulo ``n_buckets``."""
+    return (
+        F.conv(F.substring(F.md5(F.concat(ft, F.lit("#" + salt))), 1, 8), 16, 10)
+        .cast("long")
+        % n_buckets
+    ).cast("int")
+
+
 def _dsir_bucket_rows(
     docs: DataFrame,
     target_expr: str,
@@ -1010,45 +1034,23 @@ def _dsir_bucket_rows(
     higher-order-function lambdas are interpreted per element (no
     codegen), measured 4-6× slower than the identical md5 as a top-level
     expression."""
+    from mhealth_spark.pipelines.text import words_col
+
     # materialize the word array once (one project level per derived
     # expression — repeated split/filter subtrees are not reliably CSE'd)
     w0 = docs.select(
         F.col(id_col),
         F.expr(target_expr).alias("_is_t"),
-        F.filter(
-            F.split(F.col(text_col), r"\s+"), lambda w: w != F.lit("")
-        ).alias("_w"),
+        words_col(text_col).alias("_w"),
     )
-    # unigrams + adjacent bigrams; the sequence is guarded because
-    # sequence(1, 0) DESCENDS in Spark (DuckDB generate_series is empty)
-    bigrams = F.when(
-        F.size("_w") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("_w") - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(F.col("_w"), i), F.element_at(F.col("_w"), i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return w0.select(
         F.col(id_col),
         F.col("_is_t"),
-        F.explode(F.concat(F.col("_w"), bigrams)).alias("_ft"),
+        F.explode(_dsir_features(F.col("_w"))).alias("_ft"),
     ).select(
         id_col,
         "_is_t",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("_ft"), F.lit("#" + salt))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
-            % n_buckets
-        )
-        .cast("int")
-        .alias("b"),
+        _dsir_bucket(F.col("_ft"), n_buckets, salt).alias("b"),
     )
 
 

@@ -298,6 +298,12 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _line_hash(line: Column) -> Column:
+    """The boilerplate-line key: md5 of the trimmed, lower-cased line
+    (Spark ``trim`` strips spaces only, so ``\\r`` and ``\\t`` count)."""
+    return F.md5(F.lower(F.trim(line)))
+
+
 def line_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -332,7 +338,7 @@ def line_dedup(
     lines = docs.select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), line_sep)).alias("pos", "line"),
-    ).withColumn("h", F.md5(F.lower(F.trim(F.col("line")))))
+    ).withColumn("h", _line_hash(F.col("line")))
     dup_agg = lines.groupBy("h").agg(
         F.count_distinct(F.col(id_col)).alias("n_docs"),
         F.min(F.col(id_col)).alias("first_id"),
@@ -416,7 +422,7 @@ def line_duplicate_hashes(
     lines = docs.select(
         F.col(id_col),
         F.explode(F.split(F.col(text_col), line_sep)).alias("line"),
-    ).select(id_col, F.md5(F.lower(F.trim(F.col("line")))).alias("h"))
+    ).select(id_col, _line_hash(F.col("line")).alias("h"))
     return (
         lines.groupBy("h")
         .agg(
@@ -424,6 +430,16 @@ def line_duplicate_hashes(
             F.min(F.col(id_col)).alias("first_id"),
         )
         .filter(F.col("n_docs") >= min_docs)
+    )
+
+
+def _winnow_key(h: Column, pos: Column) -> Column:
+    """The winnowing sort key ``h || '#' || lpad(10^9 − pos)``: its minimum
+    over a window is the smallest hash, on ties the LARGEST position."""
+    return F.concat(
+        h,
+        F.lit("#"),
+        F.lpad((F.lit(1_000_000_000) - pos).cast("string"), 10, "0"),
     )
 
 
@@ -460,11 +476,7 @@ def winnow_fingerprints(
             F.md5("gram").alias("h"),
         )
     )
-    key = F.concat(
-        F.col("h"),
-        F.lit("#"),
-        F.lpad((F.lit(1_000_000_000) - F.col("pos")).cast("string"), 10, "0"),
-    )
+    key = _winnow_key(F.col("h"), F.col("pos"))
     win = (
         Window.partitionBy(id_col)
         .orderBy("pos")

@@ -1,5 +1,5 @@
 """QC masks & fills over wide feature frames (SURVEY §2.13, reference
-``simple_features.py:53-99``, ``simple_features_daily.py:124-143``,
+``simple_features_daily.py:124-143``,
 ``feature_qc.py:5-98``). Column selection is name-prefix logic (driver
 side); masking is ``F.when`` — all JVM expressions, no Python."""
 
@@ -7,60 +7,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-WATCH_FEATURE_ROOTS = [
-    "HeartRate",
-    "HeartRateVariabilitySDNN",
-    "OxygenSaturation",
-    "RespiratoryRate",
-    "ActiveEnergyBurned",
-    "AppleExerciseTime",
-    "AppleStandHour",
-    "Sleep",
-]
-
 # Quirk preserved (simple_features_daily.py:130-137): domains compared to
 # the FIRST underscore-token case-sensitively, so 'sleep_*' (lowercase),
 # 'OxygenSaturation_*' and 'HeartRateVariabilitySDNN_*' are NOT masked.
 DAILY_WATCH_DOMAINS = ["HeartRate", "RespiratoryRate", "Oxygen", "Sleep"]
-
-
-def qc_watch_data(
-    features: DataFrame, watch_on_threshold: float = 80.0
-) -> DataFrame:
-    """Q1 (simple_features.py:53-99): zero-fill non-cardio/resp/sleep value
-    columns, zero-fill *duration columns, then null out all watch-derived
-    columns where watch_on_percent < threshold."""
-    cols = features.columns
-    watch_cols = [
-        c for c in cols if any(c.startswith(r) for r in WATCH_FEATURE_ROOTS)
-    ]
-    duration_cols = [c for c in cols if c.endswith("duration")]
-    value_cols = [c for c in cols if not c.endswith("duration")]
-    fill_value_cols = [
-        c
-        for c in value_cols
-        if not (
-            (
-                c.lower().startswith("heart")
-                or c.lower().startswith("respiratory")
-                or c.lower().startswith("oxygen")
-                or c.lower().startswith("sleep")
-            )
-            and not c.endswith("count")
-        )
-    ]
-    numeric = {
-        f.name
-        for f in features.schema.fields
-        if f.dataType.typeName() in ("double", "float", "integer", "long")
-    }
-    out = features.fillna(
-        {c: 0.0 for c in fill_value_cols + duration_cols if c in numeric}
-    )
-    low = F.col("watch_on_percent") < watch_on_threshold
-    for c in watch_cols:
-        out = out.withColumn(c, F.when(low, F.lit(None)).otherwise(F.col(c)))
-    return out
 
 
 def qc_watch_data_daily(data: DataFrame, threshold: float = 18.0) -> DataFrame:

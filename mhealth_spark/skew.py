@@ -49,14 +49,3 @@ def salted_agg(
     salted = with_salt(df, salt_buckets)
     partial = salted.groupBy(*keys, "_salt").agg(*partial_exprs)
     return partial.groupBy(*keys).agg(*final_exprs)
-
-
-def salted_repartition(
-    df: DataFrame, entity_col: str, salt_buckets: int = 16
-) -> DataFrame:
-    """Physical spread of a skewed entity across ``salt_buckets``
-    partitions per key — use before per-partition kernels when one
-    entity's rows exceed an executor's memory."""
-    return with_salt(df, salt_buckets).repartition(
-        F.col(entity_col), F.col("_salt")
-    ).drop("_salt")

@@ -37,15 +37,6 @@ TESTDATA_TABLES = [
 ]
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when an Iceberg runtime is on the classpath."""
-    try:
-        spark._jvm.org.apache.iceberg.Schema  # type: ignore[union-attr]
-        return True
-    except Exception:
-        return False
-
-
 def read_table(spark: SparkSession, ref: str, sf_dir: str | None = None) -> DataFrame:
     """Read a table by reference.
 

@@ -1,23 +1,27 @@
-"""Structured Streaming equivalents of the engine's batch operators.
+"""Structured Streaming faces of the engine's batch operators, one
+implementation per semantics. What lives here:
 
-The reference is batch-only (SURVEY §2.15) — these are the engine
-additions for incremental pipelines, sharing semantics with the batch
-ops so a backfill (batch) and the live stream produce the same features:
+- stateful and stream-stream operators — watermarked windows and
+  sessions (``stream_tumbling_stats``, ``stream_sessionize``,
+  ``stream_hour_partials``, ``stream_drift_psi``), bounded dedup state
+  (``stream_exact_dedup``), custom per-key state
+  (``stream_rolling_features``, ``stream_anomaly``,
+  ``stream_neardup_candidates``), stream-stream as-of joins
+  (``stream_stream_backfill``, ``stream_stream_labels``) and the
+  ``foreachBatch`` gates over persisted stores (``stream_minhash_dedup``,
+  ``stream_semantic_dedup``, ``stream_ivf_ingest``,
+  ``stream_training_set``, ``compact_batch_store``);
+- map-only faces that score arriving rows against a FROZEN artifact by
+  reusing the batch op's Column expressions (``stream_dsir_score``,
+  ``stream_line_dedup``, ``stream_decontaminate``,
+  ``stream_winnow_match``, ``stream_bm25_score``) — no Python worker,
+  no state; ``stream_ann_serve`` keeps its Arrow UDF over an in-memory
+  index.
 
-- ``stream_tumbling_stats`` — R1/R4 tumbling windows with a watermark as
-  the late-data bound (the streaming face of the leakage guard: events
-  later than the watermark never mutate an emitted window).
-- ``stream_sessionize``    — I-family gap sessions via ``session_window``.
-- ``stream_rolling_features`` — the W5/north-rule feature surface as a
-  CUSTOM STATEFUL operator (``applyInPandasWithState``): O(K) state per
-  entity, event-time timeout, exact agreement with the batch window op.
-- ``stream_asof_enrich``   — stream-static as-of enrichment (each stream
-  row joined to the latest static dimension row at-or-before its ts is
-  approximated by broadcast equi-join on the entity + filter; exact
-  as-of needs the static side snapshotted per microbatch).
-
-All are plain DataFrame transformations: apply them to
-``spark.readStream`` inputs and any sink/trigger combination.
+A batch op that already runs on a ``readStream`` gets no face: e.g.
+``tokens_engine.backfill_features(events, requests_stream)`` and
+``label_horizon_features`` — for append output the caller applies
+``withWatermark`` to the request stream first.
 """
 
 from __future__ import annotations
@@ -26,7 +30,8 @@ import hashlib
 import json
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, functions as F
 
 _INTERVAL_UNIT_SECONDS = {
     "microsecond": 1e-6,
@@ -82,6 +87,31 @@ def _round_half_up(a, dp: int = 9):
             else x
         )
     return out.reshape(arr.shape)
+
+
+def _isin_frozen(c: Column, values) -> Column:
+    """``c IN values`` over a frozen set of strings, planned as a hashed
+    INSET. ``Column.isin`` costs one py4j call per literal (seconds for a
+    10k-entry set), so the set crosses to the JVM as one string."""
+    from pyspark.sql.classic.column import Column as ClassicColumn
+
+    vals = sorted(values)
+    if not vals:
+        return F.lit(False)
+    if any("\n" in v for v in vals):
+        raise ValueError("frozen set values must not contain a newline")
+    jvm = SparkContext._active_spark_context._jvm
+    jlist = (
+        jvm.java.util.regex.Pattern.compile("\n")
+        .splitAsStream("\n".join(vals))
+        .toList()
+    )
+    return ClassicColumn(c._jc.isInCollection(jlist))
+
+
+def _or_empty(arr: Column) -> Column:
+    """A string array with NULL (from NULL text) read as empty."""
+    return F.coalesce(arr, F.array().cast("array<string>"))
 
 
 def stream_tumbling_stats(
@@ -287,169 +317,25 @@ def stream_decontaminate(
     max_hits: int = 0,
 ) -> DataFrame:
     """Streaming-ingest twin of ``corpus.decontaminate``: drop stream
-    documents sharing word n-gram shingles with a benchmark/eval set.
-
-    The batch op's broadcast semi-join needs a per-doc aggregation the
-    append-mode stream cannot re-join onto itself, so the stream path
-    probes instead: the benchmark's shingle set (tiny by definition) is
-    collected ONCE and broadcast; an Arrow-vectorized pandas UDF counts
-    overlaps per document — state-free, no shuffle, each microbatch is
-    map-only. Shingling matches ``text.shingles_col`` exactly (whitespace
-    split, n-gram join, distinct), pytest-checked against the batch op.
-    """
-    from pyspark.sql.functions import pandas_udf
-
+    documents sharing more than ``max_hits`` word n-gram shingles with a
+    benchmark/eval set. The batch op's broadcast semi-join needs a
+    per-doc aggregation the append-mode stream cannot re-join onto
+    itself, so the benchmark's distinct shingles (tiny by definition)
+    are collected ONCE and each doc counts its ``text.shingles_col``
+    shingles found in that frozen set — map-only, no state, no shuffle.
+    NULL text has 0 hits."""
     from mhealth_spark.pipelines.text import shingles_col
 
-    bench_set = {
+    bench = [
         r.g
-        for r in benchmark.select(
-            F.explode(shingles_col(text_col, n)).alias("g")
-        )
+        for r in benchmark.select(F.explode(shingles_col(text_col, n)).alias("g"))
         .distinct()
         .collect()
-    }
-    bc = docs.sparkSession.sparkContext.broadcast(bench_set)
-
-    @pandas_udf("int")
-    def n_hits(texts: pd.Series) -> pd.Series:
-        bset = bc.value
-
-        def count(t):
-            if t is None:
-                return 0
-            w = [x for x in t.split() if x]
-            if not w:
-                return 0
-            grams = {" ".join(w[i : i + n]) for i in range(max(len(w) - n, 0) + 1)}
-            return len(grams & bset)
-
-        return texts.map(count).astype("int32")
-
-    return docs.withColumn("n_contaminated", n_hits(F.col(text_col))).filter(
+    ]
+    sh = _or_empty(shingles_col(text_col, n))
+    hits = F.size(F.filter(sh, lambda g: _isin_frozen(g, bench)))
+    return docs.withColumn("n_contaminated", hits).filter(
         F.col("n_contaminated") <= max_hits
-    )
-
-
-def stream_asof_enrich(
-    stream: DataFrame,
-    static_dim: DataFrame,
-    entity_col: str = "user_id",
-    value_cols: list[str] | None = None,
-) -> DataFrame:
-    """Stream-static enrichment: broadcast the (small) dimension and
-    attach its columns per entity. The static side is re-read every
-    microbatch, so slowly-changing dimensions stay fresh."""
-    cols = value_cols or [c for c in static_dim.columns if c != entity_col]
-    dim = static_dim.select(entity_col, *cols)
-    return stream.join(F.broadcast(dim), entity_col, "left")
-
-
-def stream_backfill_features(
-    requests: DataFrame,
-    events: DataFrame,
-    entity_col: str = "source",
-    event_ts: str = "ts",
-    request_ts: str = "ts",
-    lookback_hours: float = 24.0,
-    watermark: str | None = None,
-) -> DataFrame:
-    """Streaming face of ``tokens_engine.backfill_features``: feature
-    REQUESTS arrive on a stream; the static event table is joined per
-    microbatch with the same strict as-of guard
-    (``e.ts <= r.ts AND e.ts > r.ts - lookback``) — zero temporal
-    leakage, and exact value agreement with the batch twin on the same
-    request set (pytest-checked, incl. zero-event requests via the left
-    join → docs_24h = 0).
-
-    Output modes: ``complete`` needs no watermark (test/replay face);
-    for production ``append``, pass a ``watermark`` — requests finalize
-    once the watermark passes their timestamp (a request later than the
-    allowed lateness is dropped, the standard trade). At scale the static
-    side should be the persisted entity-bucketed layout (source.py) so
-    the per-microbatch join co-locates on the entity without a full
-    shuffle; for dense regular grids prefer the batch
-    ``backfill_features_grid`` rollup and keep the stream path for
-    sparse/online request sets."""
-    r = requests
-    if watermark is not None:
-        r = r.withWatermark(request_ts, watermark)
-    r = r.alias("r")
-    e = events.alias("e")
-    lb_s = int(lookback_hours * 3600)
-    cond = (
-        (F.col(f"e.{entity_col}") == F.col(f"r.{entity_col}"))
-        & (F.col(f"e.{event_ts}") <= F.col(f"r.{request_ts}"))
-        & (
-            F.col(f"e.{event_ts}")
-            > F.col(f"r.{request_ts}") - F.expr(f"INTERVAL {lb_s} SECONDS")
-        )
-    )
-    return (
-        r.join(e, cond, "left")
-        .groupBy(
-            F.col(f"r.{entity_col}").alias(entity_col),
-            F.col(f"r.{request_ts}").alias("ts"),
-        )
-        .agg(
-            F.count(F.col("e.n_tok")).alias("docs_24h"),
-            F.sum(F.col("e.n_tok")).alias("tokens_24h"),
-            F.avg(F.col("e.n_tok")).alias("mean_len_24h"),
-            F.max(F.col("e.n_tok")).alias("max_len_24h"),
-        )
-    )
-
-
-def stream_label_horizon(
-    requests: DataFrame,
-    events: DataFrame,
-    entity_col: str = "source",
-    event_ts: str = "ts",
-    request_ts: str = "ts",
-    horizon_hours: float = 24.0,
-    watermark: str | None = None,
-) -> DataFrame:
-    """Streaming face of ``tokens_engine.label_horizon_features``: label
-    REQUESTS arrive on a stream; the static (already-complete) event
-    table is joined per microbatch over the strict-future window
-    ``r.ts < e.ts <= r.ts + horizon``. Batch/stream exact agreement is
-    pytest-checked.
-
-    Semantics note for a streaming EVENT side: a forward label is only
-    final once every event up to ``r.ts + horizon`` has been seen, so a
-    stream-stream variant must hold requests with a watermark of at
-    least the horizon plus allowed lateness before emitting — labels
-    emitted earlier could still grow. With a static/complete event table
-    (the backfill-training case) no such delay is needed and ``append``
-    with any request watermark is exact for emitted rows."""
-    r = requests
-    if watermark is not None:
-        r = r.withWatermark(request_ts, watermark)
-    r = r.alias("r")
-    e = events.alias("e")
-    hz_s = int(horizon_hours * 3600)
-    cond = (
-        (F.col(f"e.{entity_col}") == F.col(f"r.{entity_col}"))
-        & (F.col(f"e.{event_ts}") > F.col(f"r.{request_ts}"))
-        & (
-            F.col(f"e.{event_ts}")
-            <= F.col(f"r.{request_ts}") + F.expr(f"INTERVAL {hz_s} SECONDS")
-        )
-    )
-    return (
-        r.join(e, cond, "left")
-        .groupBy(
-            F.col(f"r.{entity_col}").alias(entity_col),
-            F.col(f"r.{request_ts}").alias("ts"),
-        )
-        .agg(
-            F.count(F.col("e.n_tok")).alias("docs_next"),
-            F.sum(F.col("e.n_tok")).alias("tokens_next"),
-            (
-                F.unix_timestamp(F.min(F.col(f"e.{event_ts}")))
-                - F.unix_timestamp(F.first(F.col(f"r.{request_ts}")))
-            ).alias("first_gap_s"),
-        )
     )
 
 
@@ -666,46 +552,32 @@ def stream_dsir_score(
     """Streaming-ingest twin of ``corpus.dsir_weights``: score arriving
     documents against a FROZEN DSIR log-ratio table (train once on a
     static reference corpus via ``corpus.dsir_lambda_table``, ship the
-    n_buckets doubles). State-free and map-only — no watermark, no
-    shuffle, each microbatch scores independently — so it composes with
-    the other ingest-gate faces (decontaminate, exact dedup) in one
-    pass. An Arrow-vectorized pandas UDF re-derives the hashed
-    unigram+bigram buckets exactly as the batch op's exploded-codegen
-    path does (same md5 truncation, same modulus), pytest-proven equal
-    per document. ``min_weight`` turns the score into an ingest filter;
-    docs with no features score NULL and are dropped with a threshold,
-    kept without (parity with the batch op, which emits no row)."""
-    import hashlib
+    n_buckets doubles). State-free and map-only, so it composes with the
+    other ingest-gate faces in one pass. The features and their buckets
+    are the batch op's own expressions, mapped over the doc's feature
+    array instead of exploded. ``min_weight`` turns the score into an
+    ingest filter; docs with no features (NULL or blank text) score
+    ``(0, NULL)`` and are dropped with a threshold, kept without (the
+    batch op emits no row for them)."""
+    from mhealth_spark.pipelines.corpus import _dsir_bucket, _dsir_features
+    from mhealth_spark.pipelines.text import words_col
 
-    from pyspark.sql.functions import pandas_udf
-
-    lam_v = list(map(float, lam))
-    tag = "#" + salt
-
-    @pandas_udf("struct<n_feats: long, dsir_weight: double>")
-    def score(texts: pd.Series) -> pd.DataFrame:
-        def one(t):
-            if t is None:
-                return (0, None)
-            w = [x for x in t.split() if x]
-            feats = w + [f"{a} {b}" for a, b in zip(w, w[1:])]
-            if not feats:
-                return (0, None)
-            s = 0.0
-            for ft in feats:
-                hx = hashlib.md5((ft + tag).encode()).hexdigest()[:8]
-                s += lam_v[int(hx, 16) % n_buckets]
-            return (len(feats), s / len(feats))
-
-        rows = [one(t) for t in texts]
-        return pd.DataFrame(
-            {"n_feats": [r[0] for r in rows], "dsir_weight": [r[1] for r in rows]}
+    lam_lit = F.array(*[F.lit(float(x)) for x in lam])
+    buckets = F.transform(
+        _dsir_features(F.col("_w")), lambda ft: _dsir_bucket(ft, n_buckets, salt)
+    )
+    total = F.aggregate(
+        "_b", F.lit(0.0), lambda acc, b: acc + F.element_at(lam_lit, b + 1)
+    )
+    out = (
+        docs.withColumn("_w", _or_empty(words_col(text_col)))
+        .withColumn("_b", buckets)
+        .withColumn("n_feats", F.size("_b").cast("long"))
+        .withColumn(
+            "dsir_weight", F.when(F.col("n_feats") > 0, total / F.col("n_feats"))
         )
-
-    out = docs.withColumn("_s", score(F.col(text_col))).select(
-        "*", F.col("_s.n_feats").alias("n_feats"),
-        F.col("_s.dsir_weight").alias("dsir_weight"),
-    ).drop("_s")
+        .drop("_w", "_b")
+    )
     if min_weight is not None:
         out = out.filter(F.col("dsir_weight") >= min_weight)
     return out
@@ -739,6 +611,8 @@ def stream_stream_backfill(
     Event-time columns are cast to TIMESTAMP (watermarks reject NTZ;
     the session timezone is expected to be UTC, making the cast a
     representation change only)."""
+    from mhealth_spark.tokens_engine import _lookback_aggs
+
     r = (
         requests.withColumn(request_ts, F.col(request_ts).cast("timestamp"))
         .withWatermark(request_ts, request_watermark)
@@ -764,12 +638,7 @@ def stream_stream_backfill(
             F.col(f"r.{entity_col}").alias(entity_col),
             F.col(f"r.{request_ts}").alias("ts"),
         )
-        .agg(
-            F.count(F.col("e.n_tok")).alias("docs_24h"),
-            F.sum(F.col("e.n_tok")).alias("tokens_24h"),
-            F.avg(F.col("e.n_tok")).alias("mean_len_24h"),
-            F.max(F.col("e.n_tok")).alias("max_len_24h"),
-        )
+        .agg(*_lookback_aggs(F.col("e.n_tok")))
     )
 
 
@@ -797,6 +666,8 @@ def stream_stream_labels(
     online labeler pays. Defaulted accordingly; exact agreement with
     batch ``label_horizon_features`` on every emitted row is
     pytest-proven."""
+    from mhealth_spark.tokens_engine import _label_aggs
+
     if request_watermark is None:
         # derive from the ACTUAL event watermark — a hard-coded 7200 s
         # would only satisfy "request watermark >= horizon + event
@@ -830,14 +701,7 @@ def stream_stream_labels(
             F.col(f"r.{entity_col}").alias(entity_col),
             F.col(f"r.{request_ts}").alias("ts"),
         )
-        .agg(
-            F.count(F.col("e.n_tok")).alias("docs_next"),
-            F.sum(F.col("e.n_tok")).alias("tokens_next"),
-            (
-                F.unix_timestamp(F.min(F.col(f"e.{event_ts}")))
-                - F.unix_timestamp(F.first(F.col(f"r.{request_ts}")))
-            ).alias("first_gap_s"),
-        )
+        .agg(*_label_aggs(event_ts, request_ts))
     )
 
 
@@ -1223,51 +1087,21 @@ def stream_line_dedup(
     duplicated-line hash set (built once from a reference corpus via
     ``text.line_duplicate_hashes`` — boilerplate sets are output-sized
     and change slowly, the same freshness argument as the decontaminate
-    face's benchmark set). State-free, map-only pandas UDF: per doc,
-    split on ``line_sep``, drop lines whose md5(lower(trim(line))) is in
-    the set, rebuild the text in original order. Emits (…, n_lines,
-    n_kept, text_clean) exactly like the batch op, pytest-proven equal
-    doc-for-doc when the frozen set comes from the same corpus."""
-    import hashlib
+    face's benchmark set). State-free and map-only: split on
+    ``line_sep``, keep the lines whose batch line hash is not in the
+    set, rebuild the text in original order. Emits (…, n_lines, n_kept,
+    text_clean) exactly like the batch op; NULL text gives (0, 0, '')."""
+    from mhealth_spark.pipelines.text import _line_hash
 
-    from pyspark.sql.functions import pandas_udf
-
-    bc = docs.sparkSession.sparkContext.broadcast(set(dup_hashes))
-
-    @pandas_udf("struct<n_lines: long, n_kept: long, text_clean: string>")
-    def clean(texts: pd.Series) -> pd.DataFrame:
-        dset = bc.value
-
-        def one(t):
-            if t is None:
-                return (0, 0, "")
-            lines = t.split(line_sep)
-            kept = [
-                ln
-                for ln in lines
-                if hashlib.md5(ln.strip().lower().encode()).hexdigest()
-                not in dset
-            ]
-            return (len(lines), len(kept), line_sep.join(kept))
-
-        rows = [one(t) for t in texts]
-        return pd.DataFrame(
-            {
-                "n_lines": [r[0] for r in rows],
-                "n_kept": [r[1] for r in rows],
-                "text_clean": [r[2] for r in rows],
-            }
-        )
-
+    lines = _or_empty(F.split(F.col(text_col), line_sep))
+    kept = F.filter("_l", lambda ln: ~_isin_frozen(_line_hash(ln), dup_hashes))
     return (
-        docs.withColumn("_c", clean(F.col(text_col)))
-        .select(
-            "*",
-            F.col("_c.n_lines").alias("n_lines"),
-            F.col("_c.n_kept").alias("n_kept"),
-            F.col("_c.text_clean").alias("text_clean"),
-        )
-        .drop("_c")
+        docs.withColumn("_l", lines)
+        .withColumn("_k", kept)
+        .withColumn("n_lines", F.size("_l").cast("long"))
+        .withColumn("n_kept", F.size("_k").cast("long"))
+        .withColumn("text_clean", F.concat_ws(line_sep, "_k"))
+        .drop("_l", "_k")
     )
 
 
@@ -1283,62 +1117,35 @@ def stream_winnow_match(
     whose winnowing sketch overlaps a FROZEN reference fingerprint index
     (built once via ``text.winnow_fingerprints`` over the protected
     corpus — benchmark sets, licensed text, already-ingested data).
-    State-free map-only pandas UDF re-deriving the batch selection
-    exactly: k-gram md5s, rightmost-minimum per w-window via the same
-    (hash, −pos) ordering, distinct selected hashes intersected with the
-    broadcast index. Emits n_fingerprints, n_matched, and a flag at
+    State-free and map-only: the batch op's k-gram strings and
+    ``(hash, pos)`` sort key, one key per gram, then the minimum key of
+    each full ``w``-slice (the whole doc when it is shorter) — the batch
+    op's windowed rightmost-minimum. Emits n_fingerprints (distinct
+    selected hashes), n_matched (those in the index), and a flag at
     ``min_matches`` — the ingest twin of ``dedup_winnow_pairs``'s
-    pairing rule, pytest-proven to match the batch sketch per doc."""
-    import hashlib
+    pairing rule. NULL text has an empty sketch."""
+    from mhealth_spark.pipelines.text import _gram_strings, _winnow_key, words_col
 
-    from pyspark.sql.functions import pandas_udf
-
-    bc = docs.sparkSession.sparkContext.broadcast(set(index_hashes))
-
-    @pandas_udf("struct<n_fingerprints: int, n_matched: int>")
-    def match(texts: pd.Series) -> pd.DataFrame:
-        idx = bc.value
-
-        def sketch(t):
-            if t is None:
-                return set()
-            words = [x for x in t.split() if x]
-            if not words:
-                return set()
-            if len(words) < k:
-                grams = [" ".join(words)]
-            else:
-                grams = [
-                    " ".join(words[i : i + k])
-                    for i in range(len(words) - k + 1)
-                ]
-            hs = [hashlib.md5(g.encode()).hexdigest() for g in grams]
-            n = len(hs)
-            sel = set()
-            for p in range(max(n - w + 1, 1)):
-                win = hs[p : p + w]
-                # rightmost minimum: min hash, largest position on ties
-                m = min(win)
-                rpos = max(i for i, h in enumerate(win) if h == m)
-                sel.add(hs[p + rpos])
-            return sel
-
-        rows = [(lambda s_: (len(s_), len(s_ & idx)))(sketch(t)) for t in texts]
-        return pd.DataFrame(
-            {
-                "n_fingerprints": [r[0] for r in rows],
-                "n_matched": [r[1] for r in rows],
-            }
+    grams = F.filter(
+        _or_empty(_gram_strings(words_col(text_col), k)), lambda g: g != F.lit("")
+    )
+    keys = F.transform(grams, lambda g, pos: _winnow_key(F.md5(g), pos))
+    starts = F.sequence(F.lit(0), F.greatest(F.size("_keys") - w, F.lit(0)))
+    mins = F.transform(starts, lambda p: F.array_min(F.slice("_keys", p + 1, w)))
+    sketch = F.array_distinct(
+        F.transform(
+            F.filter(mins, lambda m: m.isNotNull()), lambda m: F.substring(m, 1, 32)
         )
-
+    )
     return (
-        docs.withColumn("_m", match(F.col(text_col)))
-        .select(
-            "*",
-            F.col("_m.n_fingerprints").alias("n_fingerprints"),
-            F.col("_m.n_matched").alias("n_matched"),
+        docs.withColumn("_keys", keys)
+        .withColumn("_sketch", sketch)
+        .withColumn("n_fingerprints", F.size("_sketch"))
+        .withColumn(
+            "n_matched",
+            F.size(F.filter("_sketch", lambda h: _isin_frozen(h, index_hashes))),
         )
-        .drop("_m")
+        .drop("_keys", "_sketch")
         .withColumn("winnow_flagged", F.col("n_matched") >= min_matches)
     )
 

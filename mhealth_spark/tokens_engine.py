@@ -20,7 +20,7 @@ Feature surface (all JVM-side, zero Python in the hot path):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from mhealth_spark.asof import horizon_label_join, point_in_time_join
 from mhealth_spark.intervals import sessionize
@@ -294,6 +294,31 @@ def sessionized(
     )
 
 
+def _lookback_aggs(v: Column, tag: str = "24h") -> list[Column]:
+    """The as-of lookback feature set over the joined event values ``v``
+    — shared by the batch op, its stream-stream face and the training
+    set's per-horizon columns."""
+    return [
+        F.count(v).alias(f"docs_{tag}"),
+        F.sum(v).alias(f"tokens_{tag}"),
+        F.avg(v).alias(f"mean_len_{tag}"),
+        F.max(v).alias(f"max_len_{tag}"),
+    ]
+
+
+def _label_aggs(event_ts: str = "ts", request_ts: str = "ts") -> list[Column]:
+    """The forward-horizon label set over an ``e``/``r`` aliased join —
+    shared by ``label_horizon_features`` and its stream-stream face."""
+    return [
+        F.count(F.col("e.n_tok")).alias("docs_next"),
+        F.sum(F.col("e.n_tok")).alias("tokens_next"),
+        (
+            F.unix_timestamp(F.min(F.col(f"e.{event_ts}")))
+            - F.unix_timestamp(F.first(F.col(f"r.{request_ts}")))
+        ).alias("first_gap_s"),
+    ]
+
+
 def backfill_features(
     tokens: DataFrame,
     requests: DataFrame,
@@ -302,16 +327,21 @@ def backfill_features(
     lookback_hours: float = 24.0,
 ) -> DataFrame:
     """As-of lookback features per (entity, request ts): every aggregate
-    sees only ``ts <= request.ts`` (leakage guard inside the join)."""
+    sees only ``ts <= request.ts`` (leakage guard inside the join).
+
+    ``requests`` may be a ``readStream``: the static event table is then
+    joined per micro-batch, and every emitted row equals the batch value.
+    ``complete`` output needs no watermark; for ``append``, watermark the
+    request stream first — a request is emitted once the watermark passes
+    it, and one later than the watermark is dropped::
+
+        reqs = spark.readStream.schema(schema).parquet(path)
+        backfill_features(events, reqs.withWatermark("ts", "1 hour"))
+    """
     return point_in_time_join(
         tokens,
         requests,
-        agg_exprs=[
-            F.count(F.col("e.n_tok")).alias("docs_24h"),
-            F.sum(F.col("e.n_tok")).alias("tokens_24h"),
-            F.avg(F.col("e.n_tok")).alias("mean_len_24h"),
-            F.max(F.col("e.n_tok")).alias("max_len_24h"),
-        ],
+        agg_exprs=_lookback_aggs(F.col("e.n_tok")),
         entity_col=entity_col,
         event_ts=ts_col,
         request_ts="ts",
@@ -336,18 +366,20 @@ def label_horizon_features(
 
     ``first_gap_s`` is the time to the entity's next document (NULL when
     the horizon is empty) — the "time-to-next-event" target family.
+
+    Like ``backfill_features``, it runs unchanged on a ``readStream`` of
+    requests against a complete event table; watermark the request
+    stream first for ``append`` output::
+
+        label_horizon_features(events, reqs.withWatermark("ts", "1 hour"))
+
+    With a streaming event side use ``streaming.stream_stream_labels``,
+    whose request watermark covers the horizon.
     """
     return horizon_label_join(
         tokens,
         requests,
-        agg_exprs=[
-            F.count(F.col("e.n_tok")).alias("docs_next"),
-            F.sum(F.col("e.n_tok")).alias("tokens_next"),
-            (
-                F.unix_timestamp(F.min(F.col(f"e.{ts_col}")))
-                - F.unix_timestamp(F.first(F.col("r.ts")))
-            ).alias("first_gap_s"),
-        ],
+        agg_exprs=_label_aggs(ts_col),
         entity_col=entity_col,
         event_ts=ts_col,
         request_ts="ts",
@@ -401,13 +433,7 @@ def training_set(
                 _epoch(F.col("r.ts")) - F.lit(int(lb * 3600))
             )
             v = F.when(in_h, F.col("e.n_tok"))
-        t = tag(lb)
-        aggs += [
-            F.count(v).alias(f"docs_{t}"),
-            F.sum(v).alias(f"tokens_{t}"),
-            F.avg(v).alias(f"mean_len_{t}"),
-            F.max(v).alias(f"max_len_{t}"),
-        ]
+        aggs += _lookback_aggs(v, tag(lb))
     feats = point_in_time_join(
         tokens,
         requests,

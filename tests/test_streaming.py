@@ -44,6 +44,26 @@ def _run_stream(spark, path, transform, name):
     return spark.sql(f"SELECT * FROM {name}").toPandas()
 
 
+def _assert_no_python_eval(df):
+    """Map-only ingest faces are Column expressions: no Python worker."""
+    plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        df._jdf.queryExecution(), "extended"
+    )
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+
+def _with_edge_docs(spark, docs, nbsp_text):
+    """Append the drift rows every map-only face must score like batch:
+    a doc whose words are joined by a non-breaking space (Spark's ``\\s``
+    does not split on it, Python's ``str.split`` does), a NULL text and a
+    whitespace-only text."""
+    extra = spark.createDataFrame(
+        [(90001, nbsp_text), (90002, None), (90003, " \t ")],
+        "doc_id long, text string",
+    )
+    return docs.unionByName(extra, allowMissingColumns=True)
+
+
 def test_stream_tumbling_matches_batch(spark, tmp_path):
     path = str(tmp_path / "ev")
     batch_df = _write_events(spark, path)
@@ -194,14 +214,22 @@ def test_stream_decontaminate_matches_batch(spark, tmp_path):
     from mhealth_spark.streaming import stream_decontaminate
 
     docs = read_table(spark, "documents", "/root/testdata/sf0.001")
-    corpus_side = docs.filter(F.col("doc_id") % 10 != 0)
     bench = docs.filter(F.col("doc_id") % 10 == 0)
+    # a benchmark 5-gram whose last space is a NBSP: one Spark word short
+    # of a shingle, so batch finds no hit (Python's split would)
+    words = bench.orderBy("doc_id").first().text.split()
+    corpus_side = _with_edge_docs(
+        spark,
+        docs.filter(F.col("doc_id") % 10 != 0),
+        " ".join(words[:4]) + "\u00a0" + words[4],
+    )
 
     path = str(tmp_path / "docs_stream")
     corpus_side.write.parquet(path)
     schema = spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(path)
     out = stream_decontaminate(stream, bench)
+    _assert_no_python_eval(out)
     q = (
         out.writeStream.format("memory")
         .queryName("t_decon")
@@ -216,6 +244,10 @@ def test_stream_decontaminate_matches_batch(spark, tmp_path):
     exp = {r.doc_id for r in decontaminate(corpus_side, bench).select("doc_id").collect()}
     assert got == exp
     assert len(got) < corpus_side.count()  # something was actually dropped
+    edge = spark.sql(
+        "SELECT n_contaminated FROM t_decon WHERE doc_id IN (90001, 90002, 90003)"
+    ).toPandas()
+    assert len(edge) == 3 and (edge.n_contaminated == 0).all()
 
 
 def test_stream_stateless_corpus_ops_match_batch(spark, tmp_path):
@@ -401,10 +433,9 @@ def test_stream_anomaly_matches_batch(spark, tmp_path):
 
 
 def test_stream_backfill_features_matches_batch(spark, tmp_path):
-    """stream_backfill_features: streaming requests + static event table
-    must equal the batch backfill twin on every (entity, req_ts) — same
-    strict as-of guard, zero-event requests included."""
-    from mhealth_spark.streaming import stream_backfill_features
+    """backfill_features on a readStream of requests + static event table
+    must equal the batch op on every (entity, req_ts) — same strict as-of
+    guard, zero-event requests included."""
     from mhealth_spark.synth import materialize_synth_tokens
     from mhealth_spark.tokens_engine import backfill_features, hourly_requests
 
@@ -419,7 +450,7 @@ def test_stream_backfill_features_matches_batch(spark, tmp_path):
         spark.read.parquet(req_path).schema
     ).parquet(req_path)
     q = (
-        stream_backfill_features(stream, events)
+        backfill_features(events, stream)
         .writeStream.format("memory")
         .queryName("t_backfill")
         .outputMode("complete")
@@ -441,8 +472,8 @@ def test_stream_backfill_features_matches_batch(spark, tmp_path):
 def test_stream_backfill_features_append_mode_watermark(spark, tmp_path):
     """Production face: append output with a watermark — emitted requests
     (those the final watermark passed) must match the batch twin exactly;
-    nothing beyond the watermark is emitted wrong, only withheld."""
-    from mhealth_spark.streaming import stream_backfill_features
+    nothing beyond the watermark is emitted wrong, only withheld. The
+    caller watermarks the request stream; the batch op runs unchanged."""
     from mhealth_spark.synth import materialize_synth_tokens
     from mhealth_spark.tokens_engine import backfill_features, hourly_requests
 
@@ -457,7 +488,7 @@ def test_stream_backfill_features_append_mode_watermark(spark, tmp_path):
         spark.read.parquet(req_path).schema
     ).parquet(req_path)
     q = (
-        stream_backfill_features(stream, events, watermark="1 hour")
+        backfill_features(events, stream.withWatermark("ts", "1 hour"))
         .writeStream.format("memory")
         .queryName("t_backfill_app")
         .outputMode("append")
@@ -481,10 +512,9 @@ def test_stream_backfill_features_append_mode_watermark(spark, tmp_path):
 
 
 def test_stream_label_horizon_matches_batch(spark, tmp_path):
-    """stream_label_horizon: streaming requests + static event table must
-    equal the batch forward-label twin on every (entity, req_ts),
-    empty-horizon requests included."""
-    from mhealth_spark.streaming import stream_label_horizon
+    """label_horizon_features on a readStream of requests + static event
+    table must equal the batch op on every (entity, req_ts), empty-horizon
+    requests included."""
     from mhealth_spark.synth import materialize_synth_tokens
     from mhealth_spark.tokens_engine import hourly_requests, label_horizon_features
 
@@ -499,7 +529,7 @@ def test_stream_label_horizon_matches_batch(spark, tmp_path):
         spark.read.parquet(req_path).schema
     ).parquet(req_path)
     q = (
-        stream_label_horizon(stream, events)
+        label_horizon_features(events, stream)
         .writeStream.format("memory")
         .queryName("t_label_horizon")
         .outputMode("complete")
@@ -529,15 +559,19 @@ def test_stream_dsir_score_matches_batch(spark, tmp_path):
     docs = read_table(spark, "documents", "/root/testdata/sf0.001")
     target = "source IN ('src0', 'src1')"
     lam = dsir_lambda_table(docs, target)
+    # NBSP: 2 Spark words (3 features), 3 Python words (5 features)
+    docs = _with_edge_docs(spark, docs, "alpha\u00a0beta gamma")
 
     batch = dsir_weights(docs, target, lam=lam).toPandas()
     exp = batch.set_index("doc_id")
+    assert exp.n_feats[90001] == 3
 
     path = str(tmp_path / "docs_stream")
     docs.write.parquet(path)
     schema = spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(path)
     out = stream_dsir_score(stream, lam)
+    _assert_no_python_eval(out)
     q = (
         out.writeStream.format("memory")
         .queryName("t_dsir")
@@ -549,7 +583,10 @@ def test_stream_dsir_score_matches_batch(spark, tmp_path):
     got = spark.sql(
         "SELECT doc_id, n_feats, dsir_weight FROM t_dsir"
     ).toPandas().set_index("doc_id")
-    assert set(got.index) == set(exp.index)
+    # NULL and blank text score (0, NULL); the batch op emits no row
+    blank = got.loc[[90002, 90003]]
+    assert (blank.n_feats == 0).all() and blank.dsir_weight.isna().all()
+    assert set(got.index) == set(exp.index) | {90002, 90003}
     g = got.loc[exp.index]
     assert (g.n_feats == exp.n_feats).all()
     np.testing.assert_allclose(
@@ -653,6 +690,20 @@ def test_stream_line_dedup_matches_batch(spark, tmp_path):
             ),
         ).alias("text"),
     )
+    # "footer line" is boilerplate; Spark's trim keeps the \r of a CRLF
+    # line and a trailing tab, so those two variants are distinct lines
+    edge = spark.createDataFrame(
+        [
+            (90011, "footer line\nalpha one"),
+            (90012, "footer line\nbeta two"),
+            (90013, "footer line\r\ngamma three"),
+            (90014, "footer line\t\ndelta four"),
+            (90015, None),
+            (90016, " \t "),
+        ],
+        "doc_id long, text string",
+    )
+    wrapped = wrapped.unionByName(edge)
     exp = (
         line_dedup(wrapped)
         .toPandas()
@@ -666,9 +717,10 @@ def test_stream_line_dedup_matches_batch(spark, tmp_path):
     wrapped.write.parquet(path)
     schema = spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(path)
+    out = stream_line_dedup(stream, dset)
+    _assert_no_python_eval(out)
     q = (
-        stream_line_dedup(stream, dset)
-        .select("doc_id", "n_lines", "n_kept", "text_clean")
+        out.select("doc_id", "n_lines", "n_kept", "text_clean")
         .writeStream.format("memory")
         .queryName("t_linededup")
         .outputMode("append")
@@ -682,9 +734,14 @@ def test_stream_line_dedup_matches_batch(spark, tmp_path):
         .set_index("doc_id")
         .sort_index()
     )
-    assert (got.n_lines == exp.n_lines).all()
-    assert (got.n_kept == exp.n_kept).all()
-    assert (got.text_clean == exp.text_clean).all()
+    # NULL text: (0, 0, ''); the batch op emits no row for it
+    assert tuple(got.loc[90015]) == (0, 0, "")
+    assert set(got.index) == set(exp.index) | {90015}
+    g = got.loc[exp.index]
+    assert (g.n_lines == exp.n_lines).all()
+    assert (g.n_kept == exp.n_kept).all()
+    assert (g.text_clean == exp.text_clean).all()
+    assert list(exp.n_kept.loc[[90011, 90013, 90014, 90016]]) == [1, 2, 2, 1]
 
 
 def test_stream_winnow_match_parity_and_flags(spark, tmp_path):
@@ -698,6 +755,9 @@ def test_stream_winnow_match_parity_and_flags(spark, tmp_path):
     from mhealth_spark.streaming import stream_winnow_match
 
     docs = read_table(spark, "documents", "/root/testdata/sf0.001")
+    docs = _with_edge_docs(
+        spark, docs, "one two three four five six\u00a0seven eight nine ten eleven"
+    )
     fp = winnow_fingerprints(docs, k=5, w=4).toPandas()
     index = set(fp.h)
     exp_counts = fp.groupby("doc_id").h.nunique()
@@ -706,9 +766,10 @@ def test_stream_winnow_match_parity_and_flags(spark, tmp_path):
     docs.write.parquet(path)
     schema = spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(path)
+    out = stream_winnow_match(stream, index, k=5, w=4)
+    _assert_no_python_eval(out)
     q = (
-        stream_winnow_match(stream, index, k=5, w=4)
-        .select("doc_id", "n_fingerprints", "n_matched", "winnow_flagged")
+        out.select("doc_id", "n_fingerprints", "n_matched", "winnow_flagged")
         .writeStream.format("memory")
         .queryName("t_winnow_match")
         .outputMode("append")
@@ -722,6 +783,11 @@ def test_stream_winnow_match_parity_and_flags(spark, tmp_path):
     assert (got.n_matched == got.n_fingerprints).all()
     g = got.n_fingerprints.loc[exp_counts.index]
     assert (g == exp_counts).all()
+    assert 90001 in exp_counts.index
+    # NULL and blank text: empty sketch, no batch row
+    blank = got.loc[[90002, 90003]]
+    assert (blank.n_fingerprints == 0).all() and not blank.winnow_flagged.any()
+    assert set(got.index) == set(exp_counts.index) | {90002, 90003}
     # docs with a single-fingerprint sketch can't reach min_matches=2
     assert got[got.n_fingerprints >= 2].winnow_flagged.all()
 
