@@ -27,7 +27,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
 def input_fingerprint(df: DataFrame, key_cols: list[str]) -> str:
@@ -44,6 +44,14 @@ def input_fingerprint(df: DataFrame, key_cols: list[str]) -> str:
 
 def _manifest_path(out_dir: str, part: int) -> str:
     return os.path.join(out_dir, "_manifests", f"part-{part}.json")
+
+
+def _write_json_atomic(path: str, obj: dict) -> None:
+    """Commit a JSON file by rename, so readers never see a partial one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
 
 
 def completed_partitions(out_dir: str, fingerprint: str) -> set[int]:
@@ -91,17 +99,24 @@ def checkpointed_write(
 
     if todo:
         # ONE job writes every missing bucket (dynamic partition dirs);
-        # the input is scanned once, shuffled once on the bucket key.
+        # the input is scanned once, shuffled once on the bucket key, and
+        # the per-bucket row counts ride along as observed metrics.
         bucket = F.pmod(F.xxhash64(F.col(entity_col)), F.lit(num_partitions))
+        obs = Observation("checkpointed_write")
         (
             df.withColumn("_bucket", bucket)
             .filter(F.col("_bucket").isin(todo))
+            .observe(
+                obs,
+                *[F.count_if(F.col("_bucket") == p).alias(str(p)) for p in todo],
+            )
             .repartition(len(todo), "_bucket")
             .write.mode("overwrite")
             .partitionBy("_bucket")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(out_dir + "/_staging")
         )
+        counts = obs.get
         for part in todo:
             sdir = os.path.join(out_dir, "_staging", f"_bucket={part}")
             pdir = os.path.join(out_dir, f"part={part}")
@@ -114,9 +129,7 @@ def checkpointed_write(
             else:
                 os.makedirs(pdir, exist_ok=True)  # empty bucket
             files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-            rows = (
-                spark.read.parquet(pdir).count() if files else 0
-            )
+            rows = int(counts[str(part)])
             nbytes = sum(os.path.getsize(os.path.join(pdir, f)) for f in files)
             manifest = {
                 "partition": part,
@@ -126,10 +139,7 @@ def checkpointed_write(
                 "app_id": spark.sparkContext.applicationId,
                 "finished_at_epoch": int(time.time()),
             }
-            tmp = _manifest_path(out_dir, part) + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(manifest, fh)
-            os.replace(tmp, _manifest_path(out_dir, part))  # atomic commit
+            _write_json_atomic(_manifest_path(out_dir, part), manifest)
             stats["written"] += 1
             stats["rows"] += rows
             stats["bytes"] += nbytes
@@ -142,8 +152,7 @@ def checkpointed_write(
         "entity_col": entity_col,
         "app_id": spark.sparkContext.applicationId,
     }
-    with open(os.path.join(out_dir, "_lineage.json"), "w") as fh:
-        json.dump(lineage, fh)
+    _write_json_atomic(os.path.join(out_dir, "_lineage.json"), lineage)
     return stats
 
 

@@ -712,12 +712,17 @@ def embedding_neardup_bruteforce(
     )
 
 
+# largest edge list that is resolved on the driver: a few MB of
+# (long, long) rows, far under any driver budget
+_MAX_DRIVER_EDGES = 200_000
+
+
 def neardup_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    max_driver_edges: int = 200_000,
+    max_driver_edges: int = _MAX_DRIVER_EDGES,
 ) -> DataFrame:
     """Connected components over near-dup candidate pairs → one
     ``cluster_id`` (the minimum member id) per involved document.

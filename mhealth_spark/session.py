@@ -177,6 +177,40 @@ def _warm_jvm(spark: SparkSession) -> None:
         pass
 
 
+def _package_zip(pkg_dir: str, out_dir: str) -> str:
+    """Zip the ``.py`` files of the package at ``pkg_dir`` into ``out_dir``
+    and return the zip's path.
+
+    The zip is named by a sha256 over the sources (relative name + bytes),
+    so an edited package never reuses a zip of older code. It is written
+    under a temporary name and renamed into place, so a concurrent
+    session never ships a half-written file."""
+    import hashlib
+    import zipfile
+
+    root = os.path.dirname(pkg_dir)
+    sources = sorted(
+        os.path.relpath(os.path.join(base, f), root).replace(os.sep, "/")
+        for base, _, files in os.walk(pkg_dir)
+        for f in files
+        if f.endswith(".py")
+    )
+    h = hashlib.sha256()
+    for rel in sources:
+        h.update(rel.encode())
+        with open(os.path.join(root, rel), "rb") as fh:
+            h.update(fh.read())
+    name = os.path.basename(pkg_dir)
+    zip_path = os.path.join(out_dir, f"{name}_pkg_{h.hexdigest()[:16]}.zip")
+    if not os.path.exists(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+            for rel in sources:
+                zf.write(os.path.join(root, rel), rel)
+        os.replace(tmp, zip_path)
+    return zip_path
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make ``mhealth_spark`` importable on executors.
 
@@ -184,20 +218,9 @@ def _ship_package(spark: SparkSession) -> None:
     Python workers must import the package. On a real cluster this is
     ``spark-submit --py-files mhealth_spark.zip`` (see cli.py); here we
     ship the same zip via ``addPyFile`` so any entry point — driver
-    harness, bench, tests — works regardless of cwd/PYTHONPATH.
+    harness, bench, tests — works regardless of cwd/PYTHONPATH. A failure
+    to build or ship the zip raises: workers would otherwise run whatever
+    copy of the package they find.
     """
-    import shutil
-    import tempfile
-
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    try:
-        spark.sparkContext._jsc  # session alive
-        zip_base = os.path.join(tempfile.gettempdir(), "mhealth_spark_pkg")
-        zip_path = zip_base + ".zip"
-        if not os.path.exists(zip_path):
-            shutil.make_archive(
-                zip_base, "zip", os.path.dirname(pkg_dir), "mhealth_spark"
-            )
-        spark.sparkContext.addPyFile(zip_path)
-    except Exception:  # pragma: no cover - best effort on exotic deploys
-        pass
+    spark.sparkContext.addPyFile(_package_zip(pkg_dir, tempfile.gettempdir()))

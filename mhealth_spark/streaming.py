@@ -31,7 +31,7 @@ import json
 
 import pandas as pd
 from pyspark import SparkContext
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 _INTERVAL_UNIT_SECONDS = {
     "microsecond": 1e-6,
@@ -1251,42 +1251,89 @@ def _probe_minhash_index(
     )
 
 
+def _greedy_kills(pairs) -> list:
+    """Greedy maximal independent set of a collision graph in ascending-id
+    (arrival) order: a node is killed by its smallest KEPT neighbor.
+    Returns the killed nodes as [(id, dup_of)]."""
+    nbrs: dict = {}
+    for a, b in pairs:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    kept: set = set()
+    out = []
+    for v in sorted(nbrs):  # ascending id == arrival order in batch
+        hit = kept & nbrs[v]
+        if hit:
+            out.append((v, min(hit)))
+        else:
+            kept.add(v)
+    return out
+
+
+def _kill_frame(spark, rows: list, id_col: str, id_t: str) -> DataFrame:
+    """(id, dup_of) rows collected on the driver as a local relation.
+    Built from an Arrow table (empty included), so scanning it never
+    starts a Python worker the way a parallelized list does."""
+    import pyarrow as pa
+
+    ids, dups = (list(c) for c in zip(*rows)) if rows else ([], [])
+    return spark.createDataFrame(
+        pa.table({id_col: pa.array(ids), "dup_of": pa.array(dups)}),
+        f"`{id_col}` {id_t}, dup_of {id_t}",
+    )
+
+
 def _greedy_mis_kill(
-    spark, in_pairs: DataFrame, id_col: str, id_t: str, max_iter: int = 50
+    spark,
+    in_pairs: DataFrame,
+    id_col: str,
+    id_t: str,
+    max_iter: int = 50,
+    max_driver_edges: int | None = None,
 ) -> DataFrame:
     """In-batch duplicate resolution shared by the online dedup gates:
-    greedy maximal-independent-set of the batch collision graph in
-    ascending-id (arrival) order — a doc is killed by its smallest KEPT
-    neighbor. Distributed per connected component (components of a
-    micro-batch collision graph are small by construction); returns the
-    killed rows as (id, dup_of)."""
-    from mhealth_spark.pipelines.dedup import neardup_components
+    greedy maximal-independent-set of the batch collision graph
+    (``id_a``, ``id_b`` pairs) in ascending-id order; returns the killed
+    rows as (id, dup_of).
 
+    Size-adaptive like ``neardup_components``: a pair list of at most
+    ``max_driver_edges`` rows with no NULL id is collected by one job
+    and resolved on the driver. Greedy in ascending order over the whole
+    graph equals greedy per connected component, so no components step
+    is needed. Larger graphs (and NULL ids, which cannot be ordered)
+    take the distributed path: connected components, then the same
+    greedy per component in ``applyInPandas``."""
+    from mhealth_spark.pipelines.dedup import _MAX_DRIVER_EDGES, neardup_components
+
+    if max_driver_edges is None:
+        max_driver_edges = _MAX_DRIVER_EDGES
     schema = f"`{id_col}` {id_t}, dup_of {id_t}"
-    if in_pairs.isEmpty():
-        return spark.createDataFrame([], schema)
-    comp = neardup_components(in_pairs, max_iter=max_iter)
+    rows = in_pairs.select("id_a", "id_b").limit(max_driver_edges + 1).collect()
+    if len(rows) <= max_driver_edges and all(
+        a is not None and b is not None for a, b in rows
+    ):
+        return _kill_frame(spark, _greedy_kills(rows), id_col, id_t)
+    # the pair list is read twice below (components, then the edge join)
+    in_pairs = in_pairs.localCheckpoint(eager=True)
+    comp = neardup_components(
+        in_pairs, max_iter=max_iter, max_driver_edges=max_driver_edges
+    )
     edges = in_pairs.join(
         comp.withColumnRenamed("doc_id", "id_a"), "id_a"
     ).select("cluster_id", "id_a", "id_b")
 
     def greedy(pdf: pd.DataFrame) -> pd.DataFrame:
-        nodes = sorted(set(pdf["id_a"]) | set(pdf["id_b"]))
-        nbrs: dict = {v: set() for v in nodes}
-        for a, b in zip(pdf["id_a"], pdf["id_b"]):
-            nbrs[a].add(b)
-            nbrs[b].add(a)
-        kept: set = set()
-        out = []
-        for v in nodes:  # ascending id == arrival order in batch
-            hit = sorted(kept & nbrs[v])
-            if hit:
-                out.append((v, hit[0]))
-            else:
-                kept.add(v)
-        return pd.DataFrame(out, columns=[id_col, "dup_of"])
+        return pd.DataFrame(
+            _greedy_kills(zip(pdf["id_a"], pdf["id_b"])),
+            columns=[id_col, "dup_of"],
+        )
 
-    return edges.groupBy("cluster_id").applyInPandas(greedy, schema)
+    # eager: both gates read the kills more than once
+    return (
+        edges.groupBy("cluster_id")
+        .applyInPandas(greedy, schema)
+        .localCheckpoint(eager=True)
+    )
 
 
 def stream_minhash_dedup(
@@ -1339,13 +1386,21 @@ def stream_minhash_dedup(
     store size, the warehouse-scale posture. Partitioned stores need
     periodic ``compact_batch_store(..., partition_by=["pbucket"])`` or
     generation count multiplies the directory fan-out. In-batch
-    resolution (connected components + per-component greedy) is bounded
-    by the batch's own collision graph, never the corpus —
-    ``components_max_iter`` bounds the label-propagation rounds (one per
-    hop of component diameter; raise it for pathological in-batch drift
-    chains, where ``neardup_components`` raises rather than half-merge).
+    resolution is bounded by the batch's own collision graph, never the
+    corpus, and follows ``neardup_components``' size rule: a pair list
+    of at most 200k edges with no NULL id is collected by one job and
+    the ascending-id greedy runs on the driver (greedy over the whole
+    graph equals greedy per component, so no components step). Above
+    that, or with NULL ids, it falls back to connected components plus a
+    per-component greedy in ``applyInPandas`` — ``components_max_iter``
+    bounds that path's label-propagation rounds (one per hop of
+    component diameter; raise it for pathological in-batch drift chains,
+    where ``neardup_components`` raises rather than half-merge). The
+    index kills (at most one per batch document) are collected too, and
+    the decisions are written by one broadcast join of all kills onto
+    the batch, so a small batch runs ~15 Spark jobs.
     EXACT duplicates pre-collapse before the LSH graph
-    (group by text fingerprint, the group minimum represents): a mass-
+    (the minimum id per text fingerprint represents it): a mass-
     duplicate backfill batch — millions of identical boilerplate pages,
     the realistic crawler case — would otherwise make every bucket's
     pair expansion quadratic in the copy count. The collapse preserves
@@ -1394,33 +1449,38 @@ def stream_minhash_dedup(
                 "hash_fn": hash_fn,
             },
         )
+        # exact-duplicate pre-collapse: each text fingerprint's minimum
+        # id (``_rep``) represents it, and only representatives enter the
+        # LSH graph (see docstring — semantics preserved exactly, pair
+        # expansion bounded by DISTINCT texts). A NULL id is never
+        # emitted: it can neither represent nor be ordered.
         bdocs = (
             batch.select(id_col, text_col)
+            .filter(F.col(id_col).isNotNull())
             .dropDuplicates([id_col])
-            .withColumn("_fp", F.md5(F.col(text_col)))
+            .withColumn(
+                "_rep",
+                F.min(id_col).over(Window.partitionBy(F.md5(F.col(text_col)))),
+            )
             .localCheckpoint(eager=True)
         )
-        # exact-duplicate pre-collapse: only each text fingerprint's
-        # minimum id enters the LSH graph (see docstring — semantics
-        # preserved exactly, pair expansion bounded by DISTINCT texts)
-        rep_of = bdocs.groupBy("_fp").agg(F.min(id_col).alias("_rep"))
-        rep_docs = bdocs.join(
-            rep_of.select(F.col("_rep").alias(id_col)), id_col, "left_semi"
-        )
         nb = minhash_index(
-            rep_docs, id_col, text_col, num_hashes, band_size, shingle_n, hash_fn
+            bdocs.filter(F.col(id_col) == F.col("_rep")),
+            id_col, text_col, num_hashes, band_size, shingle_n, hash_fn,
         ).localCheckpoint(eager=True)
         store = _read_store_excluding(spark, index_path, batch_id)
-
-        killed_idx = None
-        if store is not None:
-            killed_idx = _probe_minhash_index(
-                store, nb, id_col, broadcast_new, n_pb
-            ).localCheckpoint(eager=True)
-
-        alive_sigs = nb
-        if killed_idx is not None:
-            alive_sigs = nb.join(killed_idx.select(id_col), id_col, "left_anti")
+        id_t = dict(bdocs.dtypes)[id_col]
+        # index kills: at most one per batch representative, so they
+        # come to the driver and go back as a small local frame
+        killed_idx = _kill_frame(
+            spark,
+            []
+            if store is None
+            else _probe_minhash_index(store, nb, id_col, broadcast_new, n_pb).collect(),
+            id_col,
+            id_t,
+        )
+        alive_sigs = nb.join(F.broadcast(killed_idx), id_col, "left_anti")
         # in-batch pairs among index-surviving docs: the same groupBy-
         # bucket expansion the batch op uses (id_a < id_b, shared helper).
         # max_bucket guards the one hot-bucket surface the gate has: a
@@ -1451,58 +1511,33 @@ def stream_minhash_dedup(
                     f"skipped {n_hot} over-cap bucket(s) (max_bucket="
                     f"{max_bucket}) — recall bounded, cost capped"
                 )
-            in_pairs = (
-                _pairs_from_groups(
-                    groups.filter(F.size("ids") <= max_bucket)
-                )
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
+            in_pairs = _pairs_from_groups(
+                groups.filter(F.size("ids") <= max_bucket)
+            ).distinct()
         else:
-            in_pairs = bucket_pairs(alive_sigs, id_col).localCheckpoint(
-                eager=True
-            )
+            in_pairs = bucket_pairs(alive_sigs, id_col)
 
-        id_t = dict(bdocs.dtypes)[id_col]
-        killed_greedy = _greedy_mis_kill(
-            spark, in_pairs, id_col, id_t, components_max_iter
-        )
-        killed = killed_greedy
-        if killed_idx is not None:
-            killed = killed_idx.unionByName(killed_greedy)
-        rep_out = rep_docs.select(id_col).join(killed, id_col, "left")
-        # exact-dup members inherit: killed by their representative when
-        # it survives, by the representative's killer otherwise
-        members = (
-            bdocs.join(rep_of, "_fp")
-            .filter(F.col(id_col) != F.col("_rep"))
-            .join(
-                rep_out.select(
-                    F.col(id_col).alias("_rep"),
-                    F.col("dup_of").alias("_rep_dup_of"),
-                ),
-                "_rep",
-            )
-            .select(
-                id_col,
-                F.coalesce("_rep_dup_of", F.col("_rep")).alias("dup_of"),
+        kills = F.broadcast(
+            killed_idx.unionByName(
+                _greedy_mis_kill(spark, in_pairs, id_col, id_t, components_max_iter)
             )
         )
-        out = (
-            rep_out.unionByName(members)
-            .select(
-                id_col,
-                F.col("dup_of").isNotNull().alias("is_dup"),
-                "dup_of",
-            )
-            .localCheckpoint(eager=True)
+        # a representative keeps the fate recorded for its own id; an
+        # exact-dup member is killed by its representative when that
+        # survives and inherits the representative's killer otherwise
+        dup_of = (
+            F.when(F.col(id_col) == F.col("_rep"), F.col("_k"))
+            .otherwise(F.coalesce("_k", "_rep"))
         )
-        out.write.mode("overwrite").parquet(f"{output_path}/batch={batch_id}")
+        bdocs.join(
+            kills.select(F.col(id_col).alias("_rep"), F.col("dup_of").alias("_k")),
+            "_rep",
+            "left",
+        ).select(
+            id_col, dup_of.isNotNull().alias("is_dup"), dup_of.alias("dup_of")
+        ).write.mode("overwrite").parquet(f"{output_path}/batch={batch_id}")
         surv = _with_pbucket(
-            nb.join(
-                out.filter(~F.col("is_dup")).select(id_col), id_col, "left_semi"
-            ),
-            n_pb,
+            nb.join(kills.select(id_col), id_col, "left_anti"), n_pb
         ).write.mode("overwrite")
         if index_partitions:
             surv = surv.partitionBy("pbucket")
@@ -1690,7 +1725,6 @@ def stream_semantic_dedup(
             .filter(F.col("id_a") < F.col("id_b"))
             .filter(cos_ok)
             .select("id_a", "id_b")
-            .localCheckpoint(eager=True)
         )
         id_t = dict(assigned.dtypes)[id_col]
         killed = _greedy_mis_kill(

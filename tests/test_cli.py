@@ -9,7 +9,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mhealth_spark import cli  # noqa: E402
 from mhealth_spark.synth import synth_tokens  # noqa: E402

@@ -11,11 +11,12 @@ operator's results.
 
 from __future__ import annotations
 
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _chain_pairs(spark, n=40):

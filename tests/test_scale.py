@@ -53,6 +53,13 @@ def test_checkpoint_resume_identical_output(spark, tmp_path):
     # manifests carry rows/bytes + lineage fingerprint
     m = json.load(open(os.path.join(out_dir, "_manifests", "part-0.json")))
     assert m["rows"] > 0 and m["bytes"] > 0 and m["input_fingerprint"] == fp
+    # each manifest's row count (an observed metric of the write job)
+    # equals the bucket's read-back count
+    for part in range(8):
+        m = json.load(open(os.path.join(out_dir, "_manifests", f"part-{part}.json")))
+        assert m["rows"] == spark.read.parquet(
+            os.path.join(out_dir, f"part={part}")
+        ).count()
     assert os.path.exists(os.path.join(out_dir, "_lineage.json"))
 
     # changed input invalidates old manifests

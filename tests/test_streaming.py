@@ -2008,3 +2008,120 @@ def test_compact_batch_store_online_two_phase(spark, tmp_path):
     assert res2["snapshot"] == -2 and res2["rows"] == 24
     assert sorted(os.listdir(st)) == ["batch=-2"]
     assert spark.read.parquet(st).drop("batch").distinct().count() == 12
+
+
+def test_greedy_mis_kill_driver_path_equals_distributed(spark, monkeypatch):
+    """The in-batch resolver's driver path (one collect, greedy on the
+    driver) and its distributed path (connected components, then the
+    per-component greedy in ``applyInPandas``) return identical
+    (id, dup_of) rows on a seeded graph of chains, stars and isolated
+    pairs. The driver path runs no components step; NULL-id pairs always
+    take the distributed path."""
+    import random
+
+    import mhealth_spark.pipelines.dedup as dedup
+    from mhealth_spark.streaming import _greedy_mis_kill
+
+    rng = random.Random(11)
+    ids = rng.sample(range(1, 100_000), 160)
+    edges = []
+    for k in range(0, 48, 8):  # chains, in shuffled id order
+        edges += list(zip(ids[k : k + 8], ids[k + 1 : k + 8]))
+    for k in range(48, 108, 12):  # stars
+        edges += [(ids[k], leaf) for leaf in ids[k + 1 : k + 12]]
+    for k in range(108, 160, 2):  # isolated pairs
+        edges.append((ids[k], ids[k + 1]))
+    for _ in range(6):  # a few links that merge chains and stars
+        a, b = rng.sample(ids[:108], 2)
+        edges.append((a, b))
+    pairs = spark.createDataFrame(
+        sorted({(min(a, b), max(a, b)) for a, b in edges}),
+        "id_a long, id_b long",
+    )
+
+    def kills(df, **kw):
+        return sorted(
+            tuple(r)
+            for r in _greedy_mis_kill(spark, df, "doc_id", "bigint", **kw).collect()
+        )
+
+    calls = []
+    real = dedup.neardup_components
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(dedup, "neardup_components", spy)
+    on_driver = kills(pairs)
+    assert not calls  # no components step on the driver path
+    distributed = kills(pairs, max_driver_edges=0)
+    assert calls
+    assert on_driver == distributed
+    killed = {v for v, _ in on_driver}
+    assert len(killed) > 50 and not killed & {d for _, d in on_driver}
+
+    calls.clear()
+    with_null = spark.createDataFrame(
+        [(1, 2), (None, 3), (2, 4)], "id_a long, id_b long"
+    )
+    kills(with_null)
+    assert calls  # NULL ids cannot be ordered on the driver
+
+
+def test_stream_minhash_dedup_job_count(spark, tmp_path):
+    """Per-batch Spark job budget of the online minhash gate: a 200-doc
+    micro-batch against an existing index runs at most 18 jobs (a
+    components round trip, a distributed greedy and single-use eager
+    checkpoints made it 34). Each micro-batch runs as its own
+    availableNow query, whose jobs carry the query's runId as their job
+    group."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mhealth_spark.streaming import stream_minhash_dedup
+
+    rng = np.random.default_rng(3)
+    vocab = [f"w{i:04d}" for i in range(2000)]
+    texts = []
+    for i in range(400):
+        if i % 10 == 9:  # near-duplicate of a doc seven ids earlier
+            words = texts[i - 7].split()
+            words[int(rng.integers(len(words)))] = vocab[int(rng.integers(2000))]
+            texts.append(" ".join(words))
+        elif i % 25 == 24:  # exact duplicate
+            texts.append(texts[i - 3])
+        else:
+            texts.append(" ".join(rng.choice(vocab, 30)))
+    src = tmp_path / "src"
+    src.mkdir()
+    sc = spark.sparkContext
+    jobs = []
+    for b in range(2):
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": pa.array(range(b * 200, b * 200 + 200), pa.int64()),
+                    "text": texts[b * 200 : b * 200 + 200],
+                }
+            ),
+            str(src / f"b{b}.parquet"),
+        )
+        q = (
+            stream_minhash_dedup(
+                spark.readStream.schema("doc_id long, text string").parquet(str(src)),
+                str(tmp_path / "idx"),
+                str(tmp_path / "out"),
+            )
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        assert q.exception() is None
+        assert len(q.recentProgress) == 1  # one micro-batch per query
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(str(q.runId))))
+        out = spark.read.parquet(str(tmp_path / "out"))
+        assert out.count() == 200 * (b + 1)
+    assert out.filter("is_dup").count() > 0
+    assert 0 < jobs[1] <= 18, jobs

@@ -11,7 +11,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
 
@@ -53,3 +53,37 @@ def test_spark_submit_cli_job(spark, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 200
     assert "split" in got.columns
+
+
+def test_package_zip_named_by_content(tmp_path):
+    """The executor zip is named by a hash of the package's sources: the
+    same sources reuse one zip, an edited source gets a new one (workers
+    never import stale code), and the zip holds exactly the ``.py``
+    files, with no temporary file left behind."""
+    import shutil
+    import zipfile
+
+    from mhealth_spark import session
+
+    pkg = tmp_path / "src" / "mhealth_spark"
+    shutil.copytree(
+        os.path.dirname(session.__file__),
+        pkg,
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    out = tmp_path / "zips"
+    out.mkdir()
+    z1 = session._package_zip(str(pkg), str(out))
+    assert session._package_zip(str(pkg), str(out)) == z1
+    with open(pkg / "streaming.py", "a") as fh:
+        fh.write("\n# edited\n")
+    z2 = session._package_zip(str(pkg), str(out))
+    assert z2 != z1
+    with zipfile.ZipFile(z2) as zf:
+        names = zf.namelist()
+        assert "mhealth_spark/streaming.py" in names
+        assert all(n.endswith(".py") for n in names)
+        assert zf.read("mhealth_spark/streaming.py").endswith(b"# edited\n")
+    assert sorted(os.listdir(out)) == sorted(
+        os.path.basename(z) for z in (z1, z2)
+    )
