@@ -1,9 +1,11 @@
 """Statistical aggregates with pandas-parity corrections (SURVEY §2.6).
 
-- ``stats_exprs`` — the reference's standard stat block
+- ``corrected_skewness`` / ``corrected_kurtosis`` — the skew/kurtosis
+  terms of the reference's standard stat block
   (``simple_features.py:794-803,884-887``:
-  mean/std/min/max/count/median/skew/kurtosis) as native Spark
-  expressions. Parity traps handled here:
+  mean/std/min/max/count/median/skew/kurtosis), which ``vitals`` and the
+  ``a1_stats_corrected`` query assemble from native Spark aggregates.
+  Parity traps:
 
   * pandas ``std`` is ddof=1 → ``stddev_samp`` (exact match).
   * pandas ``skew``/``kurtosis`` are the bias-corrected sample G1/G2
@@ -42,27 +44,6 @@ def corrected_kurtosis(col: Column, n: Column) -> Column:
     return F.when(
         n >= 4, ((n + 1) * g2 + 6) * (n - 1) / ((n - 2) * (n - 3))
     ).otherwise(F.lit(None))
-
-
-STANDARD_STATS = ["mean", "std", "min", "max", "count", "median", "skew", "kurtosis"]
-
-
-def stats_exprs(value_col: str, prefix: str = "", stats: list[str] | None = None) -> list[Column]:
-    """The reference's `aggregate([...])` stat block as Spark expressions."""
-    c = F.col(value_col)
-    n = F.count(c)
-    all_exprs = {
-        "mean": F.mean(c),
-        "std": F.stddev_samp(c),
-        "min": F.min(c),
-        "max": F.max(c),
-        "count": n.cast("double"),
-        "median": F.median(c),
-        "skew": corrected_skewness(c, n),
-        "kurtosis": corrected_kurtosis(c, n),
-    }
-    use = stats or STANDARD_STATS
-    return [all_exprs[s].alias(f"{prefix}{s}") for s in use]
 
 
 def ols_exprs(x_col: str, y_col: str, prefix: str = "") -> list[Column]:

@@ -18,8 +18,8 @@ distributed job with explicit explosion control:
   request timestamp via the union-sort-fill trick — zero join explosion,
   reuses the (entity, ts) partition layout.
 
-- ``interval_join`` / ``interval_anti_join`` (J2/J3): point-in-interval
-  (semi/inner/anti) via interval bucketization: periods explode to the
+- ``interval_join`` (J2/J3): point-in-interval (semi/inner/anti —
+  ``how='anti'`` is J3) via interval bucketization: periods explode to the
   buckets they cover (``F.sequence``), points map to one bucket, the
   equi-join on ``(entity, bucket)`` prunes the cross product, the exact
   range predicate refines.
@@ -303,11 +303,6 @@ def interval_join(
         )
         return out
     raise ValueError(f"unknown how={how!r}")
-
-
-def interval_anti_join(points: DataFrame, periods: DataFrame, **kw) -> DataFrame:
-    """J3 convenience wrapper."""
-    return interval_join(points, periods, how="anti", **kw)
 
 
 def nearest_fill_daily(

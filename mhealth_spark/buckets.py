@@ -21,16 +21,6 @@ from pyspark.sql import Column, functions as F
 SECONDS_PER_DAY = 86400
 
 
-def hour_bucket(ts_col: str = "local_start") -> Column:
-    """Epoch-aligned hourly bucket start (R1-R3)."""
-    return F.date_trunc("HOUR", F.col(ts_col)).alias("hour_bucket")
-
-
-def day_bucket(ts_col: str = "local_start") -> Column:
-    """Midnight-aligned daily bucket (R4, origin='start_day')."""
-    return F.date_trunc("DAY", F.col(ts_col)).alias("day_bucket")
-
-
 def anchored_day_bucket(
     ts_col: str = "local_start", anchor_hour: int = 15
 ) -> Column:

@@ -573,19 +573,14 @@ def embedding_neardup_pairs(
     streaming's ``max_bucket_ids``.
     """
     # one pass: per-row norm + all band signatures (cheap, per-row only)
-    from mhealth_spark.pipelines.similarity import sign_signature
-
-    v = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
-    ).withColumn(
-        "nrm",
-        F.sqrt(
-            F.aggregate(
-                F.transform("v", lambda x: x * x), F.lit(0.0), lambda s, x: s + x
-            )
-        ),
+    from mhealth_spark.pipelines.similarity import (
+        _cos_side,
+        _normed,
+        _pair_cosine,
+        sign_signature,
     )
+
+    v = _normed(df, id_col, vec_col)
     bands = v.select(
         "id",
         F.explode(
@@ -649,34 +644,16 @@ def embedding_neardup_pairs(
     cand = grouped.select(F.explode(pair_structs).alias("p")).select(
         F.col("p.id_a"), F.col("p.id_b")
     )
-    va = v.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    vb = v.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
+    va, vb = _cos_side(v, "a"), _cos_side(v, "b")
     if broadcast_vectors:
         va, vb = F.broadcast(va), F.broadcast(vb)
     else:
         cand = cand.distinct()
-    # exact refine: ONE fold per candidate pair (norms precomputed per row;
-    # sequential accumulation = DuckDB list_cosine_similarity parity)
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
+    # exact refine: ONE fold per candidate pair (norms precomputed per row)
     out = (
         cand.join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn(
-            "cosine",
-            # null-safe: zero-norm vectors have undefined cosine — WHEN
-            # keeps ANSI mode from throwing DIVIDE_BY_ZERO; NULL never
-            # passes the threshold filter
-            F.when(
-                (F.col("na") * F.col("nb")) != 0,
-                dot / (F.col("na") * F.col("nb")),
-            ),
-        )
+        .withColumn("cosine", _pair_cosine())
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -1267,6 +1244,8 @@ def _semantic_pairs_from(
     swaps the vector-rejoin broadcasts for shuffled hash joins keyed on
     id — required once the embedding table exceeds the broadcast budget
     (the 100-TB default; both paths emit identical pairs)."""
+    from mhealth_spark.pipelines.similarity import _cos_side, _normed, _pair_cosine
+
     a, b = assigned.alias("a"), assigned.alias("b")
     cand = a.join(
         b, (F.col("a.cid") == F.col("b.cid")) & (F.col("a.id") < F.col("b.id"))
@@ -1275,41 +1254,14 @@ def _semantic_pairs_from(
         F.col("b.id").alias("id_b"),
         F.col("a.cid").alias("cid"),
     )
-    v = emb.select(
-        F.col(id_col).alias("id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
-    ).withColumn(
-        "nrm",
-        F.sqrt(
-            F.aggregate(
-                F.transform("v", lambda x: x * x), F.lit(0.0), lambda s, x: s + x
-            )
-        ),
-    )
-    va = v.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    vb = v.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
+    v = _normed(emb, id_col, vec_col)
+    va, vb = _cos_side(v, "a"), _cos_side(v, "b")
     if broadcast_vectors:
         va, vb = F.broadcast(va), F.broadcast(vb)
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn(
-            "cosine",
-            # null-safe: zero-norm vectors have undefined cosine — WHEN
-            # keeps ANSI mode from throwing DIVIDE_BY_ZERO; NULL never
-            # passes the threshold filter
-            F.when(
-                (F.col("na") * F.col("nb")) != 0,
-                dot / (F.col("na") * F.col("nb")),
-            ),
-        )
+        .withColumn("cosine", _pair_cosine())
         .filter(F.round("cosine", 9) >= threshold)
         .select("id_a", "id_b", "cid", "cosine")
     )

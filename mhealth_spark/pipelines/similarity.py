@@ -247,16 +247,32 @@ def pick_centroids(
     iterations keeps the whole structure reproducible in any engine —
     the property the DuckDB oracle needs. ``orderBy().limit(n)`` is a
     per-partition top-n + single small reduce, not a global sort."""
+    return _seed_vectors(corpus, n_centroids, id_col, vec_col, salt)
+
+
+def _seed_vectors(
+    corpus: DataFrame, n: int, id_col: str, vec_col: str, salt: str
+) -> list[list[float]]:
+    """The seed draw shared by ``pick_centroids`` and
+    ``pick_pq_codebooks``: the vectors (as doubles) of the ``n`` rows
+    with the smallest ``md5(id '#' salt)`` draw, in draw order. A corpus
+    with fewer rows returns them all.
+
+    Two cheap jobs instead of one expensive one: the hash draw depends
+    only on the id, so the n seed ids are selected first — column pruning
+    drops the vector column entirely, which matters when ``corpus`` is a
+    residual frame whose vector is itself an argmax-assignment expression
+    (a single TakeOrderedAndProject would evaluate that projection for
+    EVERY row before taking n). Then a pushed-down id filter fetches just
+    those rows' vectors. Ids must be unique: a drawn id held by two rows
+    has no single vector, so it raises ``ValueError``."""
     hx = F.substring(
         F.md5(F.concat(F.col(id_col).cast("string"), F.lit("#" + salt))), 1, 8
     )
-    # id-only draw first (vector column pruned from the scan), then a
-    # pushed-down filter fetches the n winners' vectors — same two-job
-    # split as pick_pq_codebooks, same rows in the same draw order.
     id_rows = (
         corpus.select(F.col(id_col), hx.alias("_hx"))
         .orderBy("_hx", id_col)
-        .limit(n_centroids)
+        .limit(n)
         .collect()
     )
     order = {r[id_col]: i for i, r in enumerate(id_rows)}
@@ -268,14 +284,11 @@ def pick_centroids(
         )
         .collect()
     )
-    # one vector per drawn id (ids are primary keys everywhere in this
-    # engine; the guard pins the contract if a duplicate-id corpus ever
-    # reaches a seed pick)
-    by_id = {}
-    for r in picked:
-        by_id.setdefault(r[id_col], r)
-    rows = sorted(by_id.values(), key=lambda r: order[r[id_col]])
-    return [list(r["v"]) for r in rows]
+    if len(picked) != len({r[id_col] for r in picked}):
+        raise ValueError(
+            f"seed draw holds a duplicate {id_col!r}; seed picks need unique ids"
+        )
+    return [list(r["v"]) for r in sorted(picked, key=lambda r: order[r[id_col]])]
 
 
 def _dlit(x: float) -> str:
@@ -348,6 +361,40 @@ def _vec_norm(vec: Column) -> Column:
             F.transform(vec, lambda x: x * x), F.lit(0.0), lambda s, v: s + v
         )
     )
+
+
+def _normed(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, v, nrm): the id as ``id``, the vector as doubles and its norm
+    — the per-row input of a pairwise cosine refine, norms folded once
+    per row instead of once per pair."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
+    ).withColumn("nrm", _vec_norm(F.col("v")))
+
+
+def _cos_side(v: DataFrame, side: str, id_col: str = "id", *keep: str) -> DataFrame:
+    """One side of a pairwise cosine join over a (id, v, nrm) frame:
+    ``id_<side>``, the ``keep`` columns, ``v<side>`` and ``n<side>``."""
+    return v.select(
+        F.col(id_col).alias(f"id_{side}"),
+        *keep,
+        F.col("v").alias(f"v{side}"),
+        F.col("nrm").alias(f"n{side}"),
+    )
+
+
+def _pair_cosine() -> Column:
+    """Cosine of a joined (``va``, ``na``) × (``vb``, ``nb``) pair from
+    the precomputed norms, as the sequential fold (DuckDB
+    ``list_cosine_similarity`` parity). NULL for a zero-norm side, as in
+    ``cosine_expr``: the WHEN keeps ANSI mode from throwing
+    DIVIDE_BY_ZERO, and NULL never passes a threshold filter."""
+    dot = F.aggregate(
+        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
+    )
+    denom = F.col("na") * F.col("nb")
+    return F.when(denom != 0, dot / denom)
 
 
 def _centroid_scores_arr(
@@ -563,38 +610,7 @@ def pick_pq_codebooks(
     argument as ``pick_centroids``; no Lloyd iterations keeps the whole
     structure engine-reproducible, which the DuckDB oracle needs).
     Returns ``cb[m][j] = j-th code vector of subspace m``."""
-    hx = F.substring(
-        F.md5(F.concat(F.col(id_col).cast("string"), F.lit("#" + salt))), 1, 8
-    )
-    # two cheap jobs instead of one expensive one: the hash draw depends
-    # only on the id, so select the n seed ids first — column pruning
-    # drops the vector column entirely, which matters when ``corpus`` is
-    # a residual frame whose vector is itself an argmax-assignment
-    # expression (the old single TakeOrderedAndProject evaluated that
-    # projection for EVERY row before taking n). Then fetch just those n
-    # rows' vectors with a pushed-down id filter. Same rows, same
-    # per-row math — bit-identical codebooks.
-    id_rows = (
-        corpus.select(F.col(id_col), hx.alias("_hx"))
-        .orderBy("_hx", id_col)
-        .limit(n_codes)
-        .collect()
-    )
-    order = {r[id_col]: i for i, r in enumerate(id_rows)}
-    picked = (
-        corpus.filter(F.col(id_col).isin(list(order)))
-        .select(
-            F.col(id_col),
-            F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
-        )
-        .collect()
-    )
-    # one vector per drawn id — same contract guard as pick_centroids
-    by_id = {}
-    for r in picked:
-        by_id.setdefault(r[id_col], r)
-    rows = sorted(by_id.values(), key=lambda r: order[r[id_col]])
-    vecs = [list(r["v"]) for r in rows]
+    vecs = _seed_vectors(corpus, n_codes, id_col, vec_col, salt)
     d = len(vecs[0])
     ds = d // n_subspaces
     return [

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from mhealth_spark.pipelines import dedup, multimodal, similarity, text
 from mhealth_spark.queries import register
 from mhealth_spark.source import read_table
+from mhealth_spark.synth import TOKENS_CACHE_DIR
 
 _WORDS_SQL = "list_filter(string_split_regex(text, '\\s+'), w -> w <> '')"
 _SHINGLES_SQL = (
@@ -917,7 +918,7 @@ def tpch_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # value-level DuckDB oracle (the xxhash64 generator itself has no DuckDB
 # twin, but the materialized bytes are engine-neutral).
 # ---------------------------------------------------------------------------
-_TOKENS_PARQUET = "/root/repo/.synth_cache/tokens_n3000_seed42.parquet"
+_TOKENS_PARQUET = f"{TOKENS_CACHE_DIR}/tokens_n3000_seed42.parquet"
 _TOKENS_DUCK = f"read_parquet('{_TOKENS_PARQUET}/*.parquet')"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -3789,7 +3790,7 @@ def corpus_contamination_provenance(spark: SparkSession, sf_dir: str) -> DataFra
 # BPE vocabulary learning (pipelines/bpe.py). Runs on a 256-vocab variant
 # of the synthetic tokens table so adjacent pairs actually repeat.
 # ---------------------------------------------------------------------------
-_BPE_PARQUET = "/root/repo/.synth_cache/tokens_n3000_seed42_v256.parquet"
+_BPE_PARQUET = f"{TOKENS_CACHE_DIR}/tokens_n3000_seed42_v256.parquet"
 _BPE_DUCK = f"read_parquet('{_BPE_PARQUET}/*.parquet')"
 _BPE_NEW_ID = 256  # first fresh id above the 256-token vocab
 

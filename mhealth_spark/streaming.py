@@ -1226,26 +1226,24 @@ def _with_pbucket(df: DataFrame, n: int = _PBUCKETS) -> DataFrame:
     )
 
 
-def _probe_minhash_index(
-    store: DataFrame,
-    nb: DataFrame,
-    id_col: str,
-    broadcast_new: bool = True,
-    n_partitions: int = _PBUCKETS,
-) -> DataFrame:
-    """Index-kill probe shared by the online gate and its tests: join
-    the batch's band buckets against the persisted survivor index on
-    (pbucket, band, bucket) and return each killed id with its smallest
-    colliding survivor as (id, dup_of). With the store partitioned by
-    pbucket, the broadcast probe side reaches the index scan as a
-    dynamic partition filter — per-batch index IO is bounded by touched
-    buckets, not store size."""
-    probe = _with_pbucket(nb, n_partitions).withColumnRenamed(id_col, "_new")
-    if broadcast_new:
-        probe = F.broadcast(probe)
+def _probe_minhash_index(store: DataFrame, nb: DataFrame, id_col: str) -> DataFrame:
+    """Index-kill probe of the online minhash gate: join the batch's band
+    buckets against the persisted survivor index on (pbucket, band,
+    bucket) and return each killed id with its smallest colliding
+    survivor as (id, dup_of). The gate's key frame already carries
+    ``pbucket`` (the column it also writes to the index); a frame
+    without it gets the default modulus. The batch side is broadcast,
+    so with the store partitioned by pbucket it reaches the index scan
+    as a dynamic partition filter — per-batch index IO is bounded by
+    touched buckets, not store size."""
+    if "pbucket" not in nb.columns:
+        nb = _with_pbucket(nb)
     return (
         store.select(F.col(id_col).alias("_old"), "pbucket", "band", "bucket")
-        .join(probe, ["pbucket", "band", "bucket"])
+        .join(
+            F.broadcast(nb.withColumnRenamed(id_col, "_new")),
+            ["pbucket", "band", "bucket"],
+        )
         .groupBy(F.col("_new").alias(id_col))
         .agg(F.min("_old").alias("dup_of"))
     )
@@ -1336,6 +1334,107 @@ def _greedy_mis_kill(
     )
 
 
+def _online_gate(
+    stream: DataFrame,
+    store_path: str,
+    output_path: str,
+    id_col: str,
+    layout: dict,
+    fp: Column,
+    keys,
+    probe,
+    pairs,
+    partition_by: str | None = None,
+    member_inherits: Column | None = None,
+):
+    """The per-batch protocol of the online dedup gates
+    (``stream_minhash_dedup``, ``stream_semantic_dedup``): greedy
+    first-survivor-wins in (micro-batch, id) order over a persisted
+    store of survivor keys. Each gate supplies only its own parts:
+
+    - ``layout`` — the store's identity, pinned beside it
+      (``_assert_store_layout``) so a mismatched rerun fails fast instead
+      of probing incompatible keys and silently missing every duplicate;
+    - ``fp`` — an exact-duplicate fingerprint over the batch row;
+    - ``keys(reps)`` — the survivor-key frame of the batch's fingerprint
+      representatives (carries ``id_col`` and ``partition_by``);
+    - ``probe(store, keys)`` — (id, dup_of): each key row colliding with
+      a stored survivor, with its smallest such survivor;
+    - ``pairs(alive, batch_id)`` — (id_a, id_b) in-batch collision pairs
+      among the key rows the probe left alive;
+    - ``member_inherits`` — where an exact-dup member takes its
+      representative's fate (default: everywhere).
+
+    Per micro-batch: NULL ids are dropped (they can neither represent
+    nor be ordered) and each id keeps one row; ``_rep`` = min(id) over a
+    window on ``fp`` is the exact-duplicate pre-collapse — only
+    representatives enter the collision graph, so pair cost is bounded
+    by DISTINCT payloads, not copies (identical payload ⇒ identical
+    collision neighbourhood, so the collapse is exact). The index kills
+    (at most one per representative) are collected and come back as a
+    local frame; the in-batch graph of the survivors is resolved by
+    ``_greedy_mis_kill``. ``out`` is ONE broadcast left join of all kills
+    on ``_rep``: a representative keeps its own fate, a member is killed
+    by its representative when that survives and inherits the
+    representative's killer otherwise (only where ``member_inherits``
+    holds; elsewhere it is emitted as a survivor). Survivor keys (key
+    rows minus kills) are written partitioned by ``partition_by`` or
+    flat. Exactly-once under ``foreachBatch`` retries: both stores write
+    ``mode("overwrite")`` into the batch's own ``batch=<id>`` directory
+    and the store read excludes the live batch's directory, so a
+    replayed micro-batch rewrites the same files (ids are assumed unique
+    across the stream). A 200-row batch runs ~15 Spark jobs.
+
+    Returns the configured ``DataStreamWriter``."""
+
+    def _emit(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        spark = batch.sparkSession
+        _assert_store_layout(store_path, layout)
+        bdocs = (
+            batch.filter(F.col(id_col).isNotNull())
+            .dropDuplicates([id_col])
+            .withColumn("_rep", F.min(id_col).over(Window.partitionBy(fp)))
+            .localCheckpoint(eager=True)
+        )
+        kf = keys(bdocs.filter(F.col(id_col) == F.col("_rep"))).localCheckpoint(
+            eager=True
+        )
+        store = _read_store_excluding(spark, store_path, batch_id)
+        id_t = dict(bdocs.dtypes)[id_col]
+        killed_idx = _kill_frame(
+            spark, [] if store is None else probe(store, kf).collect(), id_col, id_t
+        )
+        alive = kf.join(F.broadcast(killed_idx), id_col, "left_anti")
+        kills = F.broadcast(
+            killed_idx.unionByName(
+                _greedy_mis_kill(spark, pairs(alive, batch_id), id_col, id_t)
+            )
+        )
+        inherit = F.coalesce("_k", "_rep")
+        if member_inherits is not None:
+            inherit = F.when(member_inherits, inherit)
+        dup_of = F.when(F.col(id_col) == F.col("_rep"), F.col("_k")).otherwise(
+            inherit
+        )
+        bdocs.join(
+            kills.select(F.col(id_col).alias("_rep"), F.col("dup_of").alias("_k")),
+            "_rep",
+            "left",
+        ).select(
+            id_col, dup_of.isNotNull().alias("is_dup"), dup_of.alias("dup_of")
+        ).write.mode("overwrite").parquet(f"{output_path}/batch={batch_id}")
+        surv = kf.join(kills.select(id_col), id_col, "left_anti").write.mode(
+            "overwrite"
+        )
+        if partition_by:
+            surv = surv.partitionBy(partition_by)
+        surv.parquet(f"{store_path}/batch={batch_id}")
+
+    return stream.writeStream.outputMode("append").foreachBatch(_emit)
+
+
 def stream_minhash_dedup(
     docs: DataFrame,
     index_path: str,
@@ -1346,8 +1445,6 @@ def stream_minhash_dedup(
     band_size: int = 2,
     shingle_n: int = 5,
     hash_fn: str = "xxh",
-    broadcast_new: bool = True,
-    components_max_iter: int = 50,
     index_partitions: int | None = None,
     max_bucket: int | None = None,
 ):
@@ -1357,64 +1454,43 @@ def stream_minhash_dedup(
     in place — the lambda bridge ``stream_hour_partials`` provides for
     aggregates, here for fuzzy dedup.
 
-    Contract (greedy first-survivor-wins): documents are processed in
-    (micro-batch, id) order; a document is a duplicate iff it LSH-
-    collides with an earlier SURVIVOR — either one already in the
-    persisted index or a smaller-id survivor in its own batch. This is
-    the greedy maximal-independent-set of the collision graph in arrival
-    order, the standard ONLINE dedup semantics: it is deliberately not
-    the batch pipeline's global min-per-component (impossible online —
-    a later, smaller-id member of a component cannot retroactively evict
-    an already-emitted survivor). Only survivors enter the index, so the
-    index stays duplicate-free and grows sub-linearly on dup-heavy
-    streams. Collision == duplicate (the probabilistic LSH contract,
-    same as the batch candidate op); the index stores signatures only,
-    so an exact-Jaccard verify tier would need survivor text retained
-    downstream — run ``jaccard_verify_pairs`` there if needed.
+    Contract (greedy first-survivor-wins, the ``_online_gate``
+    protocol): documents are processed in (micro-batch, id) order; a
+    document is a duplicate iff it LSH-collides with an earlier
+    SURVIVOR — either one already in the persisted index or a smaller-id
+    survivor in its own batch. This is the greedy maximal-independent-set
+    of the collision graph in arrival order, the standard ONLINE dedup
+    semantics: it is deliberately not the batch pipeline's global
+    min-per-component (impossible online — a later, smaller-id member of
+    a component cannot retroactively evict an already-emitted survivor).
+    Only survivors enter the index, so the index stays duplicate-free and
+    grows sub-linearly on dup-heavy streams. Collision == duplicate (the
+    probabilistic LSH contract, same as the batch candidate op); the
+    index stores signatures only, so an exact-Jaccard verify tier would
+    need survivor text retained downstream — run ``jaccard_verify_pairs``
+    there if needed. EXACT duplicates (same ``md5(text)``) pre-collapse
+    before the LSH graph: a mass-duplicate backfill batch — millions of
+    identical boilerplate pages, the realistic crawler case — would
+    otherwise make every bucket's pair expansion quadratic in the copy
+    count (pytest-asserted equal to the uncollapsed sequential greedy).
 
     Scale shape: the probe joins the index on (pbucket, band, bucket) —
     pbucket is an n-way hash of the LSH bucket key — with the BATCH side
-    broadcast (``broadcast_new=False`` falls back to a shuffled
-    equi-join for jumbo backfill batches); the index is never shuffled.
-    ``index_partitions`` picks the index layout by deployment scale:
-    None (default) persists it flat — right while the survivor set is
-    small, where per-batch partition-directory overhead dominates
-    (measured: BENCH/ONLINE_GATES.md); an int (e.g. 256) persists it
-    PARTITIONED BY pbucket, and the batch's selective pbucket set then
-    reaches the index scan as a dynamic partition filter (plan-asserted
-    in pytest) — per-batch index IO bounded by touched buckets, not
-    store size, the warehouse-scale posture. Partitioned stores need
-    periodic ``compact_batch_store(..., partition_by=["pbucket"])`` or
-    generation count multiplies the directory fan-out. In-batch
-    resolution is bounded by the batch's own collision graph, never the
-    corpus, and follows ``neardup_components``' size rule: a pair list
-    of at most 200k edges with no NULL id is collected by one job and
-    the ascending-id greedy runs on the driver (greedy over the whole
-    graph equals greedy per component, so no components step). Above
-    that, or with NULL ids, it falls back to connected components plus a
-    per-component greedy in ``applyInPandas`` — ``components_max_iter``
-    bounds that path's label-propagation rounds (one per hop of
-    component diameter; raise it for pathological in-batch drift chains,
-    where ``neardup_components`` raises rather than half-merge). The
-    index kills (at most one per batch document) are collected too, and
-    the decisions are written by one broadcast join of all kills onto
-    the batch, so a small batch runs ~15 Spark jobs.
-    EXACT duplicates pre-collapse before the LSH graph
-    (the minimum id per text fingerprint represents it): a mass-
-    duplicate backfill batch — millions of identical boilerplate pages,
-    the realistic crawler case — would otherwise make every bucket's
-    pair expansion quadratic in the copy count. The collapse preserves
-    the greedy semantics EXACTLY, not approximately: identical text ⇒
-    identical signature ⇒ identical collision neighborhood, so a member
-    is killed by its representative when the representative survives
-    and inherits the representative's killer otherwise (pytest-asserted
-    against the uncollapsed sequential greedy). Exactly-once under
-    ``foreachBatch`` retries: both
-    stores write ``mode("overwrite")`` into the batch's own
-    ``batch=<id>`` directory and every read of the index excludes the
-    live batch's directory, so a replayed micro-batch rewrites the same
-    files — the emitted decisions and the index contents are replay-
-    stable (ids are assumed unique across the stream).
+    broadcast; the index is never shuffled. ``index_partitions`` picks
+    the index layout by deployment scale: None (default) persists it
+    flat — right while the survivor set is small, where per-batch
+    partition-directory overhead dominates (measured:
+    BENCH/ONLINE_GATES.md); an int (e.g. 256) persists it PARTITIONED BY
+    pbucket, and the batch's selective pbucket set then reaches the index
+    scan as a dynamic partition filter (plan-asserted in pytest) —
+    per-batch index IO bounded by touched buckets, not store size, the
+    warehouse-scale posture. Partitioned stores need periodic
+    ``compact_batch_store(..., partition_by=["pbucket"])`` or generation
+    count multiplies the directory fan-out. In-batch resolution is
+    bounded by the batch's own collision graph, never the corpus
+    (``_greedy_mis_kill``). ``max_bucket`` caps the in-batch pair
+    expansion: buckets holding more batch representatives are skipped
+    and counted per batch.
 
     Returns the configured ``DataStreamWriter`` — attach a trigger and
     ``checkpointLocation`` and ``.start()``.
@@ -1425,62 +1501,7 @@ def stream_minhash_dedup(
     # only becomes a physical layout when index_partitions is set
     n_pb = index_partitions or _PBUCKETS
 
-    def _emit(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        # the modulus (and flat-vs-partitioned layout) is part of the
-        # INDEX's identity, not the run's: probing a store built with a
-        # different modulus silently matches nothing (every duplicate
-        # missed, no error). So are the SIGNATURE parameters — a store
-        # built under hash_fn='xxh' probed with 'md5' signatures (or a
-        # different num_hashes/band_size/shingle_n) produces disjoint
-        # (band, bucket) values: same silent recall hole, same cure.
-        # Persist all of it beside the data on first write and refuse to
-        # run against a mismatched store.
-        _assert_store_layout(
-            index_path,
-            {
-                "pbucket_modulus": n_pb,
-                "partitioned": bool(index_partitions),
-                "num_hashes": num_hashes,
-                "band_size": band_size,
-                "shingle_n": shingle_n,
-                "hash_fn": hash_fn,
-            },
-        )
-        # exact-duplicate pre-collapse: each text fingerprint's minimum
-        # id (``_rep``) represents it, and only representatives enter the
-        # LSH graph (see docstring — semantics preserved exactly, pair
-        # expansion bounded by DISTINCT texts). A NULL id is never
-        # emitted: it can neither represent nor be ordered.
-        bdocs = (
-            batch.select(id_col, text_col)
-            .filter(F.col(id_col).isNotNull())
-            .dropDuplicates([id_col])
-            .withColumn(
-                "_rep",
-                F.min(id_col).over(Window.partitionBy(F.md5(F.col(text_col)))),
-            )
-            .localCheckpoint(eager=True)
-        )
-        nb = minhash_index(
-            bdocs.filter(F.col(id_col) == F.col("_rep")),
-            id_col, text_col, num_hashes, band_size, shingle_n, hash_fn,
-        ).localCheckpoint(eager=True)
-        store = _read_store_excluding(spark, index_path, batch_id)
-        id_t = dict(bdocs.dtypes)[id_col]
-        # index kills: at most one per batch representative, so they
-        # come to the driver and go back as a small local frame
-        killed_idx = _kill_frame(
-            spark,
-            []
-            if store is None
-            else _probe_minhash_index(store, nb, id_col, broadcast_new, n_pb).collect(),
-            id_col,
-            id_t,
-        )
-        alive_sigs = nb.join(F.broadcast(killed_idx), id_col, "left_anti")
+    def pairs(alive: DataFrame, batch_id: int) -> DataFrame:
         # in-batch pairs among index-surviving docs: the same groupBy-
         # bucket expansion the batch op uses (id_a < id_b, shared helper).
         # max_bucket guards the one hot-bucket surface the gate has: a
@@ -1491,59 +1512,54 @@ def stream_minhash_dedup(
         # bucket with a survivor is killed, so each (band, bucket) holds
         # ≤1 survivor — capped runs weaken this to ≤ per-batch skips).
         # Skipped buckets are counted per batch (visible, never silent).
-        if max_bucket is not None:
-            from mhealth_spark.pipelines.dedup import (
-                _bucket_groups,
-                _pairs_from_groups,
-            )
+        if max_bucket is None:
+            return bucket_pairs(alive, id_col)
+        from mhealth_spark.pipelines.dedup import _bucket_groups, _pairs_from_groups
 
-            # ONE (band, bucket) aggregation feeds both the audit count
-            # and the pair expansion — a second full groupBy per trigger
-            # just to maybe print a warning is a whole extra job on the
-            # driver-floor-bound per-batch path
-            groups = _bucket_groups(alive_sigs, id_col).localCheckpoint(
-                eager=True
+        # ONE (band, bucket) aggregation feeds both the audit count and
+        # the pair expansion — a second full groupBy per trigger just to
+        # maybe print a warning is a whole extra job on the
+        # driver-floor-bound per-batch path
+        groups = _bucket_groups(alive, id_col).localCheckpoint(eager=True)
+        n_hot = groups.filter(F.size("ids") > max_bucket).count()
+        if n_hot:
+            print(
+                f"stream_minhash_dedup batch={batch_id}: "
+                f"skipped {n_hot} over-cap bucket(s) (max_bucket="
+                f"{max_bucket}) — recall bounded, cost capped"
             )
-            n_hot = groups.filter(F.size("ids") > max_bucket).count()
-            if n_hot:
-                print(
-                    f"stream_minhash_dedup batch={batch_id}: "
-                    f"skipped {n_hot} over-cap bucket(s) (max_bucket="
-                    f"{max_bucket}) — recall bounded, cost capped"
-                )
-            in_pairs = _pairs_from_groups(
-                groups.filter(F.size("ids") <= max_bucket)
-            ).distinct()
-        else:
-            in_pairs = bucket_pairs(alive_sigs, id_col)
+        return _pairs_from_groups(groups.filter(F.size("ids") <= max_bucket)).distinct()
 
-        kills = F.broadcast(
-            killed_idx.unionByName(
-                _greedy_mis_kill(spark, in_pairs, id_col, id_t, components_max_iter)
-            )
-        )
-        # a representative keeps the fate recorded for its own id; an
-        # exact-dup member is killed by its representative when that
-        # survives and inherits the representative's killer otherwise
-        dup_of = (
-            F.when(F.col(id_col) == F.col("_rep"), F.col("_k"))
-            .otherwise(F.coalesce("_k", "_rep"))
-        )
-        bdocs.join(
-            kills.select(F.col(id_col).alias("_rep"), F.col("dup_of").alias("_k")),
-            "_rep",
-            "left",
-        ).select(
-            id_col, dup_of.isNotNull().alias("is_dup"), dup_of.alias("dup_of")
-        ).write.mode("overwrite").parquet(f"{output_path}/batch={batch_id}")
-        surv = _with_pbucket(
-            nb.join(kills.select(id_col), id_col, "left_anti"), n_pb
-        ).write.mode("overwrite")
-        if index_partitions:
-            surv = surv.partitionBy("pbucket")
-        surv.parquet(f"{index_path}/batch={batch_id}")
-
-    return docs.writeStream.outputMode("append").foreachBatch(_emit)
+    return _online_gate(
+        docs.select(id_col, text_col),
+        index_path,
+        output_path,
+        id_col,
+        # the modulus (and flat-vs-partitioned layout) is part of the
+        # INDEX's identity, not the run's: probing a store built with a
+        # different modulus silently matches nothing. So are the
+        # SIGNATURE parameters — a store built under hash_fn='xxh' probed
+        # with 'md5' signatures (or a different num_hashes/band_size/
+        # shingle_n) produces disjoint (band, bucket) values.
+        layout={
+            "pbucket_modulus": n_pb,
+            "partitioned": bool(index_partitions),
+            "num_hashes": num_hashes,
+            "band_size": band_size,
+            "shingle_n": shingle_n,
+            "hash_fn": hash_fn,
+        },
+        fp=F.md5(F.col(text_col)),
+        keys=lambda reps: _with_pbucket(
+            minhash_index(
+                reps, id_col, text_col, num_hashes, band_size, shingle_n, hash_fn
+            ),
+            n_pb,
+        ),
+        probe=lambda store, kf: _probe_minhash_index(store, kf, id_col),
+        pairs=pairs,
+        partition_by="pbucket" if index_partitions else None,
+    )
 
 
 def stream_semantic_dedup(
@@ -1554,16 +1570,13 @@ def stream_semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    broadcast_new: bool = True,
-    components_max_iter: int = 50,
 ):
     """Online SemDeDup ingest gate — the embedding analog of
-    ``stream_minhash_dedup``: each arriving vector is KEPT or DROPPED by
-    cosine >= ``threshold`` against earlier SURVIVORS, with comparisons
-    bounded to the vector's coarse IVF cluster (the SemDeDup contract:
-    duplicates never straddle coarse clusters). Greedy first-survivor-
-    wins in (micro-batch, id) order, exactly the minhash gate's
-    semantics; only survivors enter the persisted store, so it stays
+    ``stream_minhash_dedup`` on the same ``_online_gate`` protocol: each
+    arriving vector is KEPT or DROPPED by cosine >= ``threshold`` against
+    earlier SURVIVORS, with comparisons bounded to the vector's coarse
+    IVF cluster (the SemDeDup contract: duplicates never straddle coarse
+    clusters). Only survivors enter the persisted store, so it stays
     duplicate-free.
 
     ``centroids`` is the FIXED coarse quantizer (list of vectors, e.g.
@@ -1578,211 +1591,82 @@ def stream_semantic_dedup(
     Scale shape: assignment is the map-only centroid-literal argmax
     (``ivf_assign``) — no shuffle; the survivor store persists
     PARTITIONED BY cid and the probe joins the BATCH's assigned vectors
-    (broadcast when ``broadcast_new``, bounded by the micro-batch)
-    against it on cid, so the probe prunes the scan to the batch's
-    touched clusters and the store is never shuffled. Survivor rows
-    persist (id, cid, v, nrm) — norms are computed once, at ingest;
-    zero-norm vectors (failed/padded embeddings) have undefined cosine
-    and are null-guarded so they never match and never throw under ANSI
-    mode (a bare division would poison-pill the stream on replay).
-    Exactly-once via per-batch overwrite directories, live batch
-    excluded from every store read (shared ``_read_store_excluding``
-    contract); compact generations with
-    ``compact_batch_store(..., partition_by=["cid"])``. Cosines compare
-    at 9 dp (``F.round``), matching the batch ``semantic_pairs`` refine.
-    ``components_max_iter`` as in ``stream_minhash_dedup``.
+    (broadcast, bounded by the micro-batch) against it on cid, so the
+    probe prunes the scan to the batch's touched clusters and the store
+    is never shuffled. Survivor rows persist (id, cid, v, nrm) — norms
+    are computed once, at ingest; zero-norm vectors (failed/padded
+    embeddings) have undefined cosine and are null-guarded so they never
+    match and never throw under ANSI mode (a bare division would
+    poison-pill the stream on replay). Exact copies (same vector text)
+    pre-collapse like the minhash gate's, except zero-norm copies: their
+    cosine is NULL, not 1, so the uncollapsed greedy never kills them and
+    they are emitted as survivors (and need no store rows — a zero-norm
+    vector can never cosine-kill anything later). Compact generations
+    with ``compact_batch_store(..., partition_by=["cid"])``. Cosines
+    compare at 9 dp (``F.round``), matching the batch ``semantic_pairs``
+    refine.
 
     Returns the configured ``DataStreamWriter`` — attach a trigger and
     ``checkpointLocation`` and ``.start()``.
     """
-    from mhealth_spark.pipelines.similarity import ivf_assign
+    from mhealth_spark.pipelines.similarity import (
+        _cos_side,
+        _pair_cosine,
+        _vec_norm,
+        ivf_assign,
+    )
 
-    # the coarse quantizer is the STORE's identity (see docstring: a
-    # drifted quantizer re-clusters new vectors away from the stored
-    # survivors' cids and the cluster-bounded probe silently misses
-    # every cross-run duplicate). Fingerprint it once; the marker turns
-    # the documented must-not-drift contract into an immediate error.
-    _centroid_fp = hashlib.md5(
-        json.dumps(
-            [[round(float(x), 9) for x in c] for c in centroids]
-        ).encode()
-    ).hexdigest()
+    cos_ok = F.round(_pair_cosine(), 9) >= threshold
 
-    def _emit(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        _assert_store_layout(
-            store_path,
-            {
-                "centroid_md5": _centroid_fp,
-                "n_centroids": len(centroids),
-                "dim": len(centroids[0]) if centroids else 0,
-            },
-        )
-        bvecs = (
-            batch.select(id_col, vec_col)
-            .dropDuplicates([id_col])
-            .withColumn(
-                "_fp",
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        F.transform(F.col(vec_col), lambda x: x.cast("string")),
-                    )
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # exact-duplicate pre-collapse, same contract as the minhash
-        # gate: identical vector => identical cid and identical cosine
-        # to everything (and cos(v, v) = 1 >= any threshold), so only
-        # the fingerprint minimum enters the cluster graph and members
-        # inherit its fate — in-cluster pair cost is bounded by DISTINCT
-        # vectors, not copies. Exception: zero-norm groups (cos is NULL,
-        # not 1) — their members are emitted as survivors below.
-        rep_of = bvecs.groupBy("_fp").agg(F.min(id_col).alias("_rep"))
-        assigned = (
-            ivf_assign(
-                bvecs.join(
-                    rep_of.select(F.col("_rep").alias(id_col)),
-                    id_col,
-                    "left_semi",
-                ).select(id_col, vec_col),
-                centroids,
-                id_col,
-                vec_col,
-            )
-            .withColumn(
-                "nrm",
-                F.sqrt(
-                    F.aggregate(
-                        F.transform("v", lambda x: x * x),
-                        F.lit(0.0),
-                        lambda s, x: s + x,
-                    )
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        store = _read_store_excluding(spark, store_path, batch_id)
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return _cos_side(df, s, id_col, "cid")
 
-        dot = F.aggregate(
-            F.zip_with("va", "vb", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        )
-        # null-guarded: a zero-norm vector (failed/padded embedding) has
-        # undefined cosine — the WHEN branch keeps ANSI mode from
-        # throwing DIVIDE_BY_ZERO mid-stream (a poison-pill crash loop
-        # under at-least-once replay); NULL >= threshold is NULL, so
-        # zero-norm rows simply never match
-        denom = F.col("na") * F.col("nb")
-        cos_ok = (
-            F.when(denom != 0, F.round(dot / denom, 9)).otherwise(F.lit(None))
-            >= threshold
-        )
-
-        killed_idx = None
-        if store is not None:
-            probe = assigned.select(
-                F.col(id_col).alias("_new"),
-                "cid",
-                F.col("v").alias("vb"),
-                F.col("nrm").alias("nb"),
-            )
-            if broadcast_new:
-                probe = F.broadcast(probe)
-            killed_idx = (
-                store.select(
-                    F.col(id_col).alias("_old"),
-                    "cid",
-                    F.col("v").alias("va"),
-                    F.col("nrm").alias("na"),
-                )
-                .join(probe, "cid")
-                .filter(cos_ok)
-                .groupBy(F.col("_new").alias(id_col))
-                .agg(F.min("_old").alias("dup_of"))
-                .localCheckpoint(eager=True)
-            )
-
-        alive = assigned
-        if killed_idx is not None:
-            alive = assigned.join(killed_idx.select(id_col), id_col, "left_anti")
-        # in-batch pairs among store-surviving vectors: within-cluster
-        # self-join (bounded by the micro-batch), id_a < id_b
-        a = alive.select(
-            F.col(id_col).alias("id_a"), "cid",
-            F.col("v").alias("va"), F.col("nrm").alias("na"),
-        )
-        b = alive.select(
-            F.col(id_col).alias("id_b"), "cid",
-            F.col("v").alias("vb"), F.col("nrm").alias("nb"),
-        )
-        in_pairs = (
-            a.join(b, "cid")
-            .filter(F.col("id_a") < F.col("id_b"))
+    def probe(store: DataFrame, kf: DataFrame) -> DataFrame:
+        return (
+            side(store, "a")
+            .join(F.broadcast(side(kf, "b")), "cid")
             .filter(cos_ok)
+            .groupBy(F.col("id_b").alias(id_col))
+            .agg(F.min("id_a").alias("dup_of"))
+        )
+
+    def pairs(alive: DataFrame, batch_id: int) -> DataFrame:
+        return (
+            side(alive, "a")
+            .join(side(alive, "b"), "cid")
+            .filter((F.col("id_a") < F.col("id_b")) & cos_ok)
             .select("id_a", "id_b")
         )
-        id_t = dict(assigned.dtypes)[id_col]
-        killed = _greedy_mis_kill(
-            spark, in_pairs, id_col, id_t, components_max_iter
-        )
-        if killed_idx is not None:
-            killed = killed_idx.unionByName(killed)
-        rep_out = assigned.select(id_col).join(killed, id_col, "left")
-        # member inheritance EXCEPT for zero-norm fingerprint groups:
-        # cosine between identical zero-norm vectors is NULL (the ANSI
-        # null guard), so the uncollapsed greedy would never kill those
-        # copies — inheriting the representative's fate there would
-        # diverge from the claimed exact parity for precisely the
-        # failed/padded-embedding rows the null guard exists for. Such
-        # members are emitted as survivors (they also never need store
-        # rows: a zero-norm vector can never cosine-kill anything later).
-        znorm = (
-            F.aggregate(
-                F.transform(vec_col, lambda x: x * x),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            )
-            == 0
-        )
-        members = (
-            bvecs.join(rep_of, "_fp")
-            .filter(F.col(id_col) != F.col("_rep"))
-            .join(
-                rep_out.select(
-                    F.col(id_col).alias("_rep"),
-                    F.col("dup_of").alias("_rep_dup_of"),
-                ),
-                "_rep",
-            )
-            .select(
-                id_col,
-                F.when(
-                    ~znorm, F.coalesce("_rep_dup_of", F.col("_rep"))
-                ).alias("dup_of"),
-            )
-        )
-        out = (
-            rep_out.unionByName(members)
-            .select(
-                id_col,
-                F.col("dup_of").isNotNull().alias("is_dup"),
-                "dup_of",
-            )
-            .localCheckpoint(eager=True)
-        )
-        out.write.mode("overwrite").parquet(f"{output_path}/batch={batch_id}")
-        assigned.join(
-            out.filter(~F.col("is_dup")).select(id_col), id_col, "left_semi"
-        ).select(id_col, "cid", "v", "nrm").write.mode("overwrite").partitionBy(
-            "cid"
-        ).parquet(f"{store_path}/batch={batch_id}")
 
-    return emb.writeStream.outputMode("append").foreachBatch(_emit)
+    return _online_gate(
+        emb.select(id_col, vec_col),
+        store_path,
+        output_path,
+        id_col,
+        # the coarse quantizer is the STORE's identity: a drifted
+        # quantizer re-clusters new vectors away from the stored
+        # survivors' cids and the cluster-bounded probe silently misses
+        # every cross-run duplicate
+        layout={
+            "centroid_md5": hashlib.md5(
+                json.dumps(
+                    [[round(float(x), 9) for x in c] for c in centroids]
+                ).encode()
+            ).hexdigest(),
+            "n_centroids": len(centroids),
+            "dim": len(centroids[0]) if centroids else 0,
+        },
+        fp=F.md5(
+            F.concat_ws(",", F.transform(F.col(vec_col), lambda x: x.cast("string")))
+        ),
+        keys=lambda reps: ivf_assign(reps, centroids, id_col, vec_col).withColumn(
+            "nrm", _vec_norm(F.col("v"))
+        ),
+        probe=probe,
+        pairs=pairs,
+        partition_by="cid",
+        member_inherits=_vec_norm(F.col(vec_col)) != 0,
+    )
 
 
 def compact_batch_store(

@@ -16,6 +16,7 @@ Both are pure functions of (n, seed): re-running yields identical bytes.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import numpy as np
 import pandas as pd
@@ -88,7 +89,10 @@ def synth_tokens(
     )
 
 
-TOKENS_CACHE_DIR = "/root/repo/.synth_cache"
+# beside the package, so every checkout keeps its own cache
+TOKENS_CACHE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".synth_cache"
+)
 
 
 def materialize_synth_tokens(
@@ -107,8 +111,6 @@ def materialize_synth_tokens(
     ``vocab`` != default gets its own cache file — the BPE queries use a
     256-token vocabulary so adjacent pairs actually repeat (mean pair
     count ~23 at n_docs=3000 vs ~1 at vocab=50k)."""
-    import os
-
     suffix = "" if vocab == 50_000 else f"_v{vocab}"
     path = os.path.join(cache_dir, f"tokens_n{n_docs}_seed{seed}{suffix}.parquet")
     if not os.path.isdir(path):

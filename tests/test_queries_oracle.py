@@ -49,6 +49,18 @@ def test_every_registered_query_has_oracle():
     carry the oracle over the identical plan shape."""
     missing = sorted(set(entry_mod.queries()) - set(entry_mod.oracle_sql()))
     assert missing == []
+    # the tokens oracles read the synth cache of THIS checkout, so the
+    # oracle SQL text depends only on where the tree is checked out
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    cached = [
+        p
+        for sql in entry_mod.oracle_sql().values()
+        for p in re.findall(r"read_parquet\('([^']*\.synth_cache[^']*)'\)", sql)
+    ]
+    assert len(cached) >= 40
+    assert {p.rsplit("/", 2)[0] for p in cached} == {f"{root}/.synth_cache"}
 
 
 def test_no_complex_typed_output_columns(spark):

@@ -76,6 +76,27 @@ def test_pick_centroids_matches_single_pass_takeordered(spark):
     assert got == want
 
 
+def test_seed_picks_raise_on_duplicate_ids(spark):
+    """A drawn id held by two rows has no single vector: both seed picks
+    raise instead of returning fewer seeds than asked. A corpus with
+    fewer rows than requested still returns all of them."""
+    import pytest
+
+    from mhealth_spark.pipelines.similarity import pick_centroids, pick_pq_codebooks
+
+    rows = [(i, [float(i), 1.0]) for i in range(10)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    dup = spark.createDataFrame(
+        rows + [(3, [9.0, 9.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="duplicate"):
+        pick_centroids(dup, 10)
+    with pytest.raises(ValueError, match="duplicate"):
+        pick_pq_codebooks(dup, n_subspaces=1, n_codes=10)
+    assert sorted(pick_centroids(emb, 20)) == sorted(v for _, v in rows)
+    assert len(pick_pq_codebooks(emb, n_subspaces=2, n_codes=20)[0]) == 10
+
+
 def test_ivf_assign_matches_unrolled_expression_form(spark):
     from mhealth_spark.pipelines.similarity import (
         _as_double,

@@ -2069,17 +2069,50 @@ def test_greedy_mis_kill_driver_path_equals_distributed(spark, monkeypatch):
     assert calls  # NULL ids cannot be ordered on the driver
 
 
-def test_stream_minhash_dedup_job_count(spark, tmp_path):
-    """Per-batch Spark job budget of the online minhash gate: a 200-doc
-    micro-batch against an existing index runs at most 18 jobs (a
-    components round trip, a distributed greedy and single-use eager
-    checkpoints made it 34). Each micro-batch runs as its own
-    availableNow query, whose jobs carry the query's runId as their job
-    group."""
-    import pyarrow as pa
+def _gate_batch_jobs(spark, tmp_path, name, gate, schema, tables):
+    """Run an online gate over ``tables``, one availableNow query (one
+    micro-batch) per table, and return each batch's Spark job count —
+    the query's jobs carry its runId as their job group."""
     import pyarrow.parquet as pq
 
-    from mhealth_spark.streaming import stream_minhash_dedup
+    src = tmp_path / f"{name}_src"
+    src.mkdir()
+    out_path = str(tmp_path / f"{name}_out")
+    sc = spark.sparkContext
+    jobs = []
+    for b, table in enumerate(tables):
+        pq.write_table(table, str(src / f"b{b}.parquet"))
+        q = (
+            gate(
+                spark.readStream.schema(schema).parquet(str(src)),
+                str(tmp_path / f"{name}_store"),
+                out_path,
+            )
+            .option("checkpointLocation", str(tmp_path / f"{name}_ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        assert q.exception() is None
+        assert len(q.recentProgress) == 1  # one micro-batch per query
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(str(q.runId))))
+        out = spark.read.parquet(out_path)
+        assert out.count() == sum(t.num_rows for t in tables[: b + 1])
+    assert out.filter("is_dup").count() > 0
+    return jobs
+
+
+def test_stream_minhash_dedup_job_count(spark, tmp_path):
+    """Per-batch Spark job budget of the online dedup gates against an
+    existing store: a 200-doc minhash micro-batch runs at most 18 jobs
+    (a components round trip, a distributed greedy and single-use eager
+    checkpoints made it 34), a 200-vector semantic micro-batch at most
+    16 (a groupBy representative, a semi-join, a members union and eager
+    kill/output checkpoints made it 24)."""
+    import pyarrow as pa
+
+    from mhealth_spark.pipelines.similarity import pick_centroids
+    from mhealth_spark.streaming import stream_minhash_dedup, stream_semantic_dedup
 
     rng = np.random.default_rng(3)
     vocab = [f"w{i:04d}" for i in range(2000)]
@@ -2093,35 +2126,50 @@ def test_stream_minhash_dedup_job_count(spark, tmp_path):
             texts.append(texts[i - 3])
         else:
             texts.append(" ".join(rng.choice(vocab, 30)))
-    src = tmp_path / "src"
-    src.mkdir()
-    sc = spark.sparkContext
-    jobs = []
-    for b in range(2):
-        pq.write_table(
-            pa.table(
-                {
-                    "doc_id": pa.array(range(b * 200, b * 200 + 200), pa.int64()),
-                    "text": texts[b * 200 : b * 200 + 200],
-                }
-            ),
-            str(src / f"b{b}.parquet"),
+    docs = [
+        pa.table(
+            {
+                "doc_id": pa.array(range(b * 200, b * 200 + 200), pa.int64()),
+                "text": texts[b * 200 : b * 200 + 200],
+            }
         )
-        q = (
-            stream_minhash_dedup(
-                spark.readStream.schema("doc_id long, text string").parquet(str(src)),
-                str(tmp_path / "idx"),
-                str(tmp_path / "out"),
-            )
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        assert q.exception() is None
-        assert len(q.recentProgress) == 1  # one micro-batch per query
-        jobs.append(len(sc.statusTracker().getJobIdsForGroup(str(q.runId))))
-        out = spark.read.parquet(str(tmp_path / "out"))
-        assert out.count() == 200 * (b + 1)
-    assert out.filter("is_dup").count() > 0
+        for b in range(2)
+    ]
+    jobs = _gate_batch_jobs(
+        spark, tmp_path, "minhash", stream_minhash_dedup,
+        "doc_id long, text string", docs,
+    )
     assert 0 < jobs[1] <= 18, jobs
+
+    vecs = []
+    for i in range(400):
+        if i % 10 == 9:  # near-duplicate of a vector seven ids earlier
+            vecs.append(vecs[i - 7] + 0.005 * rng.standard_normal(16))
+        elif i % 25 == 24:  # exact copy
+            vecs.append(vecs[i - 3].copy())
+        elif i % 97 == 50:  # zero vector (undefined cosine)
+            vecs.append(np.zeros(16))
+        else:
+            vecs.append(rng.standard_normal(16))
+    vecs = [[float(x) for x in v] for v in vecs]
+    cents = pick_centroids(
+        spark.createDataFrame(
+            list(enumerate(vecs)), "vec_id long, embedding array<double>"
+        ),
+        8,
+    )
+    embs = [
+        pa.table(
+            {
+                "vec_id": pa.array(range(b * 200, b * 200 + 200), pa.int64()),
+                "embedding": vecs[b * 200 : b * 200 + 200],
+            }
+        )
+        for b in range(2)
+    ]
+    jobs = _gate_batch_jobs(
+        spark, tmp_path, "semantic",
+        lambda s, store, out: stream_semantic_dedup(s, cents, store, out),
+        "vec_id long, embedding array<double>", embs,
+    )
+    assert 0 < jobs[1] <= 16, jobs

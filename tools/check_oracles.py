@@ -9,6 +9,7 @@ and order-insensitive values. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -16,7 +17,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mhealth_spark.session import get_spark  # noqa: E402
 from mhealth_spark.source import TESTDATA_TABLES  # noqa: E402
